@@ -44,10 +44,19 @@ object Bench {
     // timings measure execution, not first-call JIT + planning overhead;
     // one-time ingest (bucketed layout, CSV export) also happens here so
     // timed bodies measure the query, not setup cost paid once per corpus
-    // NonFatal: warm-up errors are deliberately masked (they surface in
-    // the timed pass), but fatal JVM errors (OOM, linkage) must not be
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case NonFatal(_) => () }
+    // NonFatal: a warm-up error does not stop the bench (the query is
+    // timed again, and recorded -1 if it still fails), but it is counted
+    // and named on stderr — a query broken only in warm-up, or one whose
+    // failure changes the timed pass's state, must leave a trace. Fatal
+    // JVM errors (OOM, linkage) are never caught.
+    val warmFailures = scala.collection.mutable.ArrayBuffer.empty[String]
+    def warm(name: String)(body: => Unit): Unit =
+      try body
+      catch { case NonFatal(e) =>
+        warmFailures += name
+        System.err.println(s"[bench] warm-up $name FAILED: ${e.getMessage}")
+      }
+    warm("entry")(SparkEntry.entry(spark).write.format("noop").mode("overwrite").save())
     // EVERY query once, untimed, at the TIMED scale factor. An sf0.001
     // warm-up (rounds 3's design) compiles most stages, but AQE picks
     // different physical strategies at sf0.1 (broadcast↔SMJ, coalesced
@@ -57,11 +66,12 @@ object Bench {
     // exact plan variants the timed pass will run — codegen cache is
     // sized above to hold them all — so the timed numbers measure
     // execution, full stop. JIT tiering of the kernels rides along.
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case NonFatal(_) => () }
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      warm(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       SessionHygiene.sweep(spark)
     }
+    if (warmFailures.nonEmpty)
+      System.err.println(s"[bench] warm-up: ${warmFailures.size} failed: ${warmFailures.mkString(", ")}")
     try graft.queries.ExtrasQueries.ensureSlotBucketedTables(spark, sfDir)
     catch { case NonFatal(e) => System.err.println(s"[bench] bucketed ingest failed: ${e.getMessage}") }
     try {

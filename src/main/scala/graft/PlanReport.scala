@@ -144,7 +144,7 @@ object PlanReport {
     "d79_source_overlap_minhash" ->
       "cross-source overlap matrix, production form: MinHash banded candidates (equi-join on (band, bucket)) exact-verified at theta=0.5, then TWO equi-joins attach sources to the output-sensitive pair set and fold it to a <=|sources|^2 matrix — per-pair counts halve the exploded endpoint rows, the strong tier compares in INTEGERS (5*inter >= 4*uni: 4/5 is not a double), nothing is corpus-quadratic; the oracle re-derives the BANDING itself in DuckDB (FNV shingle hashes, spliced permutation params, bands compared by value), so banding recall is hash-checked, not assumed — the exact twin d78 rides d33's inverted-index chain as ground truth",
     "s80_knn_label_eval_ivf" ->
-      "embedding-quality eval, production form: leave-one-out 1-NN label agreement where EVERY vector is a query — the probed fraction nprobe/nlist dominates, so the quantizer is occupancy-held (ivfListsFor; the fixed-16 serving quantizer measurably LOSES to brute here at sf1, 58 vs 44 s, while the held one wins 32 vs 56 s); candidates are a list-bucketed equi-join (never all-pairs), top-1 by (sim DESC, nbr_id) through the BOUNDED TopKAgg buffers (rankAgg — no Window: the window form sorts the whole candidate stream, which at n=2M is ~8e9 rows and spilled past the disk; the buffers carry <=k rows per query per partition), and the labels-sized report folds map-side; the exact twin s79 is the recall-1 ground truth and the oracle re-derives the probe path from spliced centroids",
+      "embedding-quality eval, production form: leave-one-out 1-NN label agreement where EVERY vector is a query — the probed fraction nprobe/nlist dominates, so the quantizer is occupancy-held (ivfListsFor; the fixed-16 serving quantizer measurably LOSES to brute here at sf1, 58 vs 44 s, while the held one wins 32 vs 56 s); candidates are a list-bucketed equi-join (never all-pairs), top-1 by (sim DESC, nbr_id) through the BOUNDED TopKAgg buffers (rankAgg — no Window: the window form sorts the whole candidate stream, which at n=2M is ~8e9 rows and spilled past the disk; the buffers carry <=k rows per query per partition), and the labels-sized report folds map-side; the exact twin s79 is the recall-1 ground truth, ranked by the fused broadcast-query kernel (FusedTopK: one corpus scan scores every row against the broadcast query matrix into <=k primitive buffers per query, the driver merges the task partials — no pair rows, no join, no shuffle, so its visible plan is the local top-1 table joined to the labels); the oracle re-derives the probe path from spliced centroids",
     "s81_ann_ivf_table" ->
       "the centroid-TABLE serving tier (the r12 cap lift): probe assignment joins a BROADCAST centroid table and keeps each query's nprobe best through bounded TopKAgg buffers (ObjectHashAggregate — no window sort, no per-centroid literal structs anywhere in the plan: the literal tier's array_sort signature is spec-asserted ABSENT); corpus assignment is the same broadcast join projected to SKINNY (id, score, cid) rows before a k=1 TopKAgg argmax + id join-back — the x-nlist expansion never carries a vector through an aggregation (the payload-carrying max(struct) form is complex-typed and falls back to a SORT over the expansion: measured 160 GB of spill at n=200k x nlist=1024 where the skinny form streams); nlist=128 here, 4x past the literal cap, same spliced-centroid oracle as s37",
     "s82_knn_label_eval_table" ->

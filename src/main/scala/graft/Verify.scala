@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -23,12 +24,16 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    // NonFatal: a failed query is reported and the dump goes on; a fatal
+    // JVM error (OOM, linkage) ends the run instead of dumping the rest
+    // from a damaged JVM
+    val selected = SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) }
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
+        failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // leftover caches + localCheckpoint blocks from one query must not
@@ -51,6 +56,9 @@ object Verify {
       .filter { case (k, _) => only.forall(_.contains(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    System.err.println(
+      if (failed.isEmpty) s"[verify] all ${selected.size} queries written"
+      else s"[verify] ${failed.size} of ${selected.size} queries FAILED: ${failed.sorted.mkString(", ")}")
     spark.stop()
   }
 }

@@ -23,24 +23,14 @@ class TopKAgg(k: Int)
     extends Aggregator[(java.lang.Double, java.lang.Long), Array[(Double, Long)], Array[(Double, Long)]] {
   require(k >= 1, s"k must be >= 1, got $k")
 
-  // (score DESC, id ASC) total order: a precedes b ⇔ "a ranks higher".
-  // Double.compare gives Spark's sort semantics at the edges (NaN above
-  // every value — `ORDER BY score DESC` puts NaN first); -0.0 is
-  // normalized to 0.0 at the reduce boundary to match Spark's sort-key
-  // normalization, so the buffer invariant holds for ALL doubles and
-  // the window-form equivalence survives NaN/-0.0 inputs.
-  private def beats(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
-    val c = java.lang.Double.compare(s1, s2)
-    c > 0 || (c == 0 && i1 < i2)
-  }
+  import TopKAgg.beats
 
   override def zero: Array[(Double, Long)] = Array.empty
 
   override def reduce(b: Array[(Double, Long)],
                       in: (java.lang.Double, java.lang.Long)): Array[(Double, Long)] = {
     if (in._1 == null || in._2 == null) return b
-    val raw = in._1.doubleValue()
-    val s = if (raw == 0.0) 0.0 else raw // -0.0 → 0.0, as Spark sorts it
+    val s = TopKAgg.sortKey(in._1.doubleValue())
     val id = in._2.longValue()
     val n = b.length
     if (n == k && !beats(s, id, b(n - 1)._1, b(n - 1)._2)) return b
@@ -84,6 +74,21 @@ class TopKAgg(k: Int)
 }
 
 object TopKAgg {
+  /** The (score DESC, id ASC) total order: (s1, i1) ⇔ "ranks higher".
+    * Double.compare gives Spark's sort semantics at the edges (NaN above
+    * every value — `ORDER BY score DESC` puts NaN first); scores enter
+    * through [[sortKey]], so the buffer invariant holds for ALL doubles
+    * and the window-form equivalence survives NaN/-0.0 inputs. Shared
+    * with [[graft.operators.FusedTopK]]'s primitive buffers: one tie
+    * discipline for every bounded top-k. */
+  def beats(s1: Double, i1: Long, s2: Double, i2: Long): Boolean = {
+    val c = java.lang.Double.compare(s1, s2)
+    c > 0 || (c == 0 && i1 < i2)
+  }
+
+  /** -0.0 → 0.0, as Spark's sort-key normalization treats it. */
+  def sortKey(s: Double): Double = if (s == 0.0) 0.0 else s
+
   /** Column form: `top_k(score, id, k)` → array<struct<_1: score,
     * _2: id>> ranked by (score DESC, id ASC), length ≤ k. */
   def top_k(score: Column, id: Column, k: Int): Column =

@@ -8,13 +8,18 @@ import org.apache.spark.sql.functions._
  * Similarity search over embedding columns (`array<float>`).
  *
  * Scale design: the query set is small and broadcast; the corpus scan
- * stays partitioned, so brute-force top-k is one pass over the corpus
- * with a per-partition partial top-k (window rank after a broadcast
- * join — Spark plans no corpus shuffle until the final tiny rank
- * exchange). The LSH variant buckets the corpus by random-hyperplane
- * signature so each query probes only matching buckets — the 100 TB
- * path where even one full pass is too slow. IVF would replace the
- * random planes with k-means centroids; same plumbing.
+ * stays partitioned, so brute-force top-k is ONE pass over the corpus.
+ * With `rankAgg` that pass is the fused kernel ([[FusedTopK]]): each
+ * corpus task scores its rows against the broadcast query matrix and
+ * keeps ≤ k (sim, nbr_id) per query in primitive buffers, and the
+ * driver merges the task partials — no per-pair rows, no shuffle, no
+ * sort. Without it, the scored pairs stream through a broadcast join
+ * into a window rank (the window form the audit-family callers keep).
+ * The LSH variant buckets the corpus by random-hyperplane signature so
+ * each query probes only matching buckets — the 100 TB path where even
+ * one full pass is too slow. IVF replaces the random planes with
+ * k-means centroids; its broadcast-query `rankAgg` path is the same
+ * fused kernel, restricted per row to the queries that probe its list.
  *
  * All arithmetic is elementwise-fold in DOUBLE (deterministic, matches
  * the DuckDB oracle bit-for-bit).
@@ -43,26 +48,31 @@ object Similarity {
    * Brute-force cosine top-k: for each row of `queries` (small,
    * broadcast), the `k` nearest corpus rows. Deterministic tie-break on
    * corpus id.
+   *
+   * `rankAgg` ranks through the fused kernel ([[FusedTopK]]): row-for-
+   * row the window form's answer, sims included, from one corpus scan
+   * with no per-pair rows and no shuffle. That form runs its two jobs
+   * (collect the query side, scan the corpus) when CALLED and returns a
+   * local DataFrame; the window form stays lazy until its action. The
+   * window stays the default: the audit-family callers rank
+   * metadata-sized streams where either form is free.
    */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
-                     rankAgg: Boolean = false): DataFrame = {
-    val c = corpus.select(col(idCol).as("nbr_id"), col(vecCol).as("cvec"),
-      norm(col(vecCol)).as("cn"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      norm(col(vecCol)).as("qn"))
-    val scored = c.crossJoin(broadcast(q))
-      .where(col("nbr_id") =!= col("query_id"))
-      .select(col("query_id"), col("nbr_id"),
-        cosinePrenormed(col("qvec"), col("cvec"), col("qn") * col("cn")).as("sim"))
-    // rankAgg routes the n·|queries| candidate stream through the
-    // bounded TopKAgg buffers (≤ k rows per query per partition,
-    // map-side combined) instead of a full window sort — the s80
-    // discipline, row-identical by the same (sim DESC, nbr_id) total
-    // order. The window stays the default: the audit-family callers
-    // rank metadata-sized streams where either form is free.
-    rankCandidates(scored, k, rankAgg)
-  }
+                     rankAgg: Boolean = false): DataFrame =
+    if (rankAgg && FusedTopK.applies(corpus, queries, idCol))
+      FusedTopK.brute(corpus, queries, k, idCol, vecCol)
+    else {
+      val c = corpus.select(col(idCol).as("nbr_id"), col(vecCol).as("cvec"),
+        norm(col(vecCol)).as("cn"))
+      val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
+        norm(col(vecCol)).as("qn"))
+      val scored = c.crossJoin(broadcast(q))
+        .where(col("nbr_id") =!= col("query_id"))
+        .select(col("query_id"), col("nbr_id"),
+          cosinePrenormed(col("qvec"), col("cvec"), col("qn") * col("cn")).as("sim"))
+      rankCandidates(scored, k, rankAgg)
+    }
 
   /** Deterministic pseudo-random hyperplanes: `nPlanes` × `dim`, values
     * from a seeded LCG mapped to [-1, 1). Fixed forever (stable buckets). */
@@ -627,7 +637,12 @@ object Similarity {
 
   /** The shared final ranking of a scored candidate stream
     * (query_id, nbr_id, sim) → top-k with the (sim DESC, nbr_id)
-    * tie-break every ANN oracle in this codebase encodes.
+    * tie-break every ANN oracle in this codebase encodes. Where the
+    * query set is broadcast, `rankAgg` never builds this stream: the
+    * fused kernel ([[FusedTopK]]) ranks inside the corpus scan. What
+    * reaches here is the window form, the shuffled-query forms
+    * (`broadcastQueries = false`), streaming inputs, and the literal,
+    * table and hierarchical tiers.
     *
     * `viaAgg` picks the BOUNDED-BUFFER form ([[graft.functions.TopKAgg]]
     * — the identical total order, so answers are row-for-row equal on
@@ -643,12 +658,11 @@ object Similarity {
     * WholeStageCodegen-simple.
     *
     * Two scoped differences from the window form, enforced rather than
-    * discovered: (a) the buffers key ids as LONG (checked loudly below
-    * — a non-long idCol would otherwise widen or fail inside the
-    * encoder); (b) NULL sims — impossible for finite parquet vectors,
-    * possible only for vectors with null ELEMENTS — are dropped by the
-    * buffers where `desc` nulls-last window ranking would emit them in
-    * underfull groups. */
+    * discovered: (a) the buffers key ids as LONG ([[requireLongNbr]] —
+    * a non-long idCol would otherwise widen or fail inside the
+    * encoder); (b) NULL sims (a NULL vector on either side) are dropped
+    * by the buffers where `desc` nulls-last window ranking would emit
+    * them in underfull groups. The fused kernel keeps both. */
   private def rankCandidates(cand: DataFrame, k: Int,
                              viaAgg: Boolean = false): DataFrame =
     if (!viaAgg) {
@@ -657,16 +671,19 @@ object Similarity {
         .where(col("rank") <= k)
         .select(col("query_id"), col("nbr_id"), col("rank").cast("int").as("rank"), col("sim"))
     } else {
-      require(cand.schema("nbr_id").dataType ==
-        org.apache.spark.sql.types.LongType,
-        s"rankCandidates(viaAgg): nbr_id must be LONG for the TopKAgg buffer " +
-          s"encoding, got ${cand.schema("nbr_id").dataType} — use the window form")
+      requireLongNbr(cand.schema("nbr_id").dataType)
       cand.groupBy(col("query_id"))
         .agg(graft.functions.TopKAgg.top_k(col("sim"), col("nbr_id"), k).as("tk"))
         .select(col("query_id"), posexplode(col("tk")))
         .select(col("query_id"), col("col._2").as("nbr_id"),
           (col("pos") + 1).cast("int").as("rank"), col("col._1").as("sim"))
     }
+
+  /** The bounded top-k buffers key corpus ids as LONG. */
+  private[graft] def requireLongNbr(dt: org.apache.spark.sql.types.DataType): Unit =
+    require(dt == org.apache.spark.sql.types.LongType,
+      s"rankCandidates(viaAgg): nbr_id must be LONG for the TopKAgg buffer " +
+        s"encoding, got $dt — use the window form")
 
   // ------------------------- centroid-TABLE serving tier (nlist-unbounded)
 
@@ -845,22 +862,34 @@ object Similarity {
   /** IVF top-k through the scan-local expression tier — answer-
     * identical to [[ivfTopKWith]]/[[ivfTopKByTable]] for the same
     * centroids, with neither the literal tier's nlist cap nor the
-    * table tier's row expansion. */
+    * table tier's row expansion. With `rankAgg` and broadcast queries
+    * it ranks through the fused kernel ([[FusedTopK]]), which runs when
+    * called, as [[bruteForceTopK]] describes. */
   def ivfTopKByExpr(cents: Array[Array[Double]], corpus: DataFrame, queries: DataFrame,
                     k: Int, nprobe: Int = 4,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     broadcastQueries: Boolean = true,
-                    rankAgg: Boolean = false): DataFrame =
-    rankCandidates(ivfCandidatesByExpr(ivfAssignedByExpr(cents, corpus, idCol, vecCol),
+                    rankAgg: Boolean = false): DataFrame = {
+    val assigned = ivfAssignedByExpr(cents, corpus, idCol, vecCol)
+    if (rankAgg && broadcastQueries && FusedTopK.applies(corpus, queries, idCol))
+      FusedTopK.ivf(assigned, cents, queries, k, nprobe, idCol, vecCol, pruneLists = false)
+    else rankCandidates(ivfCandidatesByExpr(assigned,
       cents, queries, nprobe, idCol, vecCol, broadcastQueries), k, rankAgg)
+  }
 
-  /** [[ivfTopKOnIndex]] through the expression tier. */
+  /** [[ivfTopKOnIndex]] through the expression tier. With `rankAgg`
+    * and broadcast queries the fused kernel reads only the probed lists
+    * (a static `__cid IN (...)` filter, partition pruning at planning
+    * time on a `partitionBy(__cid)` layout) and runs when called, as
+    * [[bruteForceTopK]] describes. */
   def ivfTopKOnIndexByExpr(cents: Array[Array[Double]], assigned: DataFrame,
                            queries: DataFrame, k: Int, nprobe: Int = 4,
                            idCol: String = "vec_id", vecCol: String = "embedding",
                            broadcastQueries: Boolean = true,
                            rankAgg: Boolean = false): DataFrame =
-    rankCandidates(ivfCandidatesByExpr(assigned, cents, queries, nprobe,
+    if (rankAgg && broadcastQueries && FusedTopK.applies(assigned, queries, idCol))
+      FusedTopK.ivf(assigned, cents, queries, k, nprobe, idCol, vecCol, pruneLists = true)
+    else rankCandidates(ivfCandidatesByExpr(assigned, cents, queries, nprobe,
       idCol, vecCol, broadcastQueries), k, rankAgg)
 
   /** [[kmeansCentroids]] with scan-local expression-tier assignment —

@@ -1097,13 +1097,15 @@ object PipelineQueries {
     "s79_knn_label_eval" -> ((s, dir) => {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
-      // rankAgg: EVERY vector is a query, so the exact-scored candidate
-      // stream is n² rows — the r16 optimization routes its top-1
-      // through the bounded TopKAgg buffers (map-side combined, ≤1 row
-      // per query per partition) instead of sorting the whole stream
-      // through one window exchange. Row-identical ((sim DESC, nbr_id)
-      // total order — the s80 discipline); the all-pairs SCORING that
-      // makes this the ground-truth form is unchanged.
+      // rankAgg: EVERY vector is a query, so the exact-scored pairs
+      // are n². The broadcast-query form ranks them inside the corpus
+      // scan (FusedTopK: ≤1 (sim, nbr_id) per query per task in
+      // primitive buffers, partials merged on the driver) — no pair
+      // rows, no join, no shuffle, no window sort. Row-identical
+      // ((sim DESC, nbr_id) total order — the s80 discipline); the
+      // all-pairs SCORING that makes this the ground-truth form is
+      // unchanged. The top-1 table is computed when this query is
+      // built; the returned plan joins it to the labels.
       knnLabelAgreement(emb, Similarity.bruteForceTopK(emb, emb, k = 1, rankAgg = true))
     }),
     // s79's PRODUCTION TWIN: the same leave-one-out eval with the

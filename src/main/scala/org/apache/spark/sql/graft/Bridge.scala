@@ -14,6 +14,13 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Run `body` — jobs launched straight off `df`'s physical plan
+    * (`queryExecution.toRdd`) — as ONE SQL execution named `name`, the
+    * way a Dataset action runs: listeners, the event log and the SQL
+    * metrics see the plan and its tasks instead of anonymous RDD jobs. */
+  def withExecution[T](df: org.apache.spark.sql.Dataset[_], name: String)(body: => T): T =
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(df.queryExecution, Some(name))(body)
+
   /**
    * Drop the block-manager blocks behind a `localCheckpoint(true)`-ed
    * Dataset. `Dataset.unpersist` only talks to the CacheManager and

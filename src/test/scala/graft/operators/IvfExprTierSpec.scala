@@ -117,23 +117,64 @@ class IvfExprTierSpec extends AnyFunSuite {
     // same total order (sim DESC, nbr_id ASC), so ranks AND carried sim
     // values must match — this is the eval-family ranking that avoids
     // sorting the whole candidate stream (the n=2M window sort spilled
-    // past the disk; SCALING.md r13 addendum 2)
-    def full(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "rank", "nbr_id", "sim").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-        .sortBy(t => (t._1, t._2))
-    def same(a: Array[(Long, Int, Long, Double)], b: Array[(Long, Int, Long, Double)]): Unit = {
-      assert(a.length == b.length)
-      a.zip(b).foreach { case (x, y) =>
-        assert(x._1 == y._1 && x._2 == y._2 && x._3 == y._3 && x._4 == y._4, s"$x vs $y")
-      }
-    }
+    // past the disk; SCALING.md r13 addendum 2). Broadcast queries rank
+    // through the fused kernel, shuffled ones through the TopKAgg stream.
+    import TopKEdgeCases.full
     val q = emb.where($"vec_id" < 8)
-    same(full(Similarity.ivfTopKByExpr(cents16, emb, q, k = 10, rankAgg = true)),
+    assert(full(Similarity.ivfTopKByExpr(cents16, emb, q, k = 10, rankAgg = true)) ==
       full(Similarity.ivfTopKByExpr(cents16, emb, q, k = 10)))
     // and on the eval shape itself (k=1, corpus-sized shuffled queries)
-    same(full(Similarity.ivfTopKByExpr(cents16, emb, emb, k = 1,
-        broadcastQueries = false, rankAgg = true)),
+    assert(full(Similarity.ivfTopKByExpr(cents16, emb, emb, k = 1,
+        broadcastQueries = false, rankAgg = true)) ==
       full(Similarity.ivfTopKByExpr(cents16, emb, emb, k = 1, broadcastQueries = false)))
+    // a 4-partition corpus, through both the corpus and the index entry
+    val spread = emb.repartition(4)
+    assert(spread.rdd.getNumPartitions == 4)
+    val window = full(Similarity.ivfTopKByExpr(cents16, spread, q, k = 10))
+    assert(full(Similarity.ivfTopKByExpr(cents16, spread, q, k = 10, rankAgg = true)) == window)
+    val assigned = Similarity.ivfAssignedByExpr(cents16, spread)
+    assert(full(Similarity.ivfTopKOnIndexByExpr(cents16, assigned, q, k = 10,
+      rankAgg = true)) == window)
+    assert(full(Similarity.ivfTopKOnIndexByExpr(cents16, assigned, q, k = 10,
+      broadcastQueries = false, rankAgg = true)) == window)
+  }
+
+  test("rankAgg on an on-disk index: the fused kernel reads only the probed lists") {
+    import TopKEdgeCases.full
+    val dir = java.nio.file.Files.createTempDirectory("ivf-fused-index").toString
+    try {
+      Similarity.ivfAssignedByExpr(cents16, emb).write.partitionBy("__cid")
+        .mode("overwrite").parquet(dir)
+      val index = spark.read.parquet(dir)
+      val q = emb.where($"vec_id" < 3)
+      val (seen, fused) = GuardListener.watch(spark)(
+        full(Similarity.ivfTopKOnIndexByExpr(cents16, index, q, k = 10, rankAgg = true)))
+      assert(fused == full(Similarity.ivfTopKOnIndexByExpr(cents16, index, q, k = 10)))
+      // the static __cid filter prunes every unprobed list's directory
+      assert(seen.plans.exists(_.linesIterator.exists(l =>
+        l.contains("PartitionFilters") && l.contains("__cid"))), seen.plans)
+      assert(seen.shuffleWrite == 0)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("rankAgg IVF edges: ties, zero and NULL vectors, self-pairs, big k, empty partitions, duplicate ids") {
+    import TopKEdgeCases._
+    val c = corpus(spark)
+    val q = queries(spark)
+    val assigned = Similarity.ivfAssignedByExpr(cents, c)
+    Seq(1, 3, 20).foreach { k =>
+      val window = windowAnswer(Similarity.ivfTopKByExpr(cents, c, q, k, nprobe = 2))
+      assert(window.nonEmpty)
+      assert(full(Similarity.ivfTopKByExpr(cents, c, q, k, nprobe = 2, rankAgg = true)) == window,
+        s"k=$k")
+      assert(full(Similarity.ivfTopKOnIndexByExpr(cents, assigned, q, k, nprobe = 2,
+        rankAgg = true)) == window, s"k=$k (index)")
+      // the shuffled-query TopKAgg stream agrees too: one tie discipline
+      assert(full(Similarity.ivfTopKByExpr(cents, c, q, k, nprobe = 2,
+        broadcastQueries = false, rankAgg = true)) == window, s"k=$k (stream)")
+    }
+    val e = intercept[IllegalArgumentException](Similarity.ivfTopKByExpr(cents,
+      c.withColumn("vec_id", $"vec_id".cast("int")), q, 3, nprobe = 2, rankAgg = true))
+    assert(e.getMessage.contains("nbr_id must be LONG"), e.getMessage)
   }
 }

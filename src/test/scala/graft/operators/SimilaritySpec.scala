@@ -32,6 +32,69 @@ class SimilaritySpec extends AnyFunSuite {
     }
   }
 
+  test("rankAgg brute: the fused kernel equals the window form row-for-row incl. sims") {
+    import TopKEdgeCases._
+    val q = emb.where($"vec_id" < 8)
+    assert(full(Similarity.bruteForceTopK(emb, q, k = 10, rankAgg = true)) ==
+      full(Similarity.bruteForceTopK(emb, q, k = 10)))
+    // a 4-partition corpus: the driver merges partials from every task
+    val spread = emb.repartition(4)
+    assert(spread.rdd.getNumPartitions == 4)
+    assert(full(Similarity.bruteForceTopK(spread, q, k = 10, rankAgg = true)) ==
+      full(Similarity.bruteForceTopK(spread, q, k = 10)))
+  }
+
+  test("rankAgg brute edges: ties, zero and NULL vectors, self-pairs, big k, empty partitions, duplicate ids") {
+    import TopKEdgeCases._
+    val c = corpus(spark)
+    val q = queries(spark)
+    assert(emptyPartitions(c) > 0)
+    Seq(1, 3, 20).foreach { k =>
+      val got = full(Similarity.bruteForceTopK(c, q, k, rankAgg = true))
+      assert(got == windowAnswer(Similarity.bruteForceTopK(c, q, k)), s"k=$k")
+      assert(!got.exists { case (qid, _, nbr, _) => qid == nbr }, "self-pair ranked")
+      assert(!got.exists(_._1 == 9L), "a NULL query vector ranks nothing")
+      assert(!got.exists(_._3 == 5L), "a NULL corpus vector ranks nowhere")
+    }
+    val at20 = full(Similarity.bruteForceTopK(c, q, 20, rankAgg = true))
+    // query 1 = [1,0,0] ties with corpus 2 and 3 at sim 1.0: id order
+    assert(at20.filter(_._1 == 1L).take(2).map(t => (t._3, t._4)) == Seq((2L, 1.0), (3L, 1.0)))
+    // the zero query scores 0.0 against everything but itself
+    assert(at20.filter(_._1 == 4L).map(_._4).toSet == Set(0.0))
+    // k past the candidate count: every non-NULL, non-self corpus row
+    assert(at20.count(_._1 == 4L) == 6)
+    // both rows of query id 6 rank jointly: one run of ranks
+    assert(at20.filter(_._1 == 6L).map(_._2) == (1 to 12))
+    // query_id keeps its type
+    val intQ = q.withColumn("vec_id", $"vec_id".cast("int"))
+    val typed = Similarity.bruteForceTopK(c, intQ, 3, rankAgg = true)
+    assert(typed.schema("query_id").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(full(typed) == windowAnswer(Similarity.bruteForceTopK(c, intQ, 3)))
+    // the buffers key nbr_id as LONG: the existing message, before any job
+    val e = intercept[IllegalArgumentException](Similarity.bruteForceTopK(
+      c.withColumn("vec_id", $"vec_id".cast("int")), q, 3, rankAgg = true))
+    assert(e.getMessage.contains("nbr_id must be LONG"), e.getMessage)
+  }
+
+  test("rankAgg brute guard: a warm broadcast-query call shuffles nothing, plans no BNLJ or ObjectHashAggregate") {
+    // a silent fallback to the candidate stream fails here, not as bench drift
+    val q = emb.where($"vec_id" < 8)
+    Similarity.bruteForceTopK(emb, q, k = 10, rankAgg = true).collect()
+    val (seen, res) = GuardListener.watch(spark) {
+      val r = Similarity.bruteForceTopK(emb, q, k = 10, rankAgg = true)
+      assert(r.collect().length == 80)
+      r
+    }
+    assert(seen.tasks > 0)
+    assert(seen.shuffleWrite == 0, s"shuffle-write bytes: ${seen.shuffleWrite}")
+    // the query collect, the corpus scan and the result's local scan
+    assert(seen.plans.size >= 3, seen.plans)
+    assert(seen.plans.exists(_.contains("Scan parquet")), seen.plans)
+    (seen.plans :+ res.queryExecution.executedPlan.toString).foreach { p =>
+      assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("ObjectHashAggregate"), p)
+    }
+  }
+
   test("LSH top-k achieves reasonable recall vs brute force") {
     val queries = emb.where($"vec_id" < 20)
     def pairs(df: org.apache.spark.sql.DataFrame) =
