@@ -36,8 +36,13 @@ object Bench {
       // shapes (each evicted stage pays a multi-second janino recompile on
       // its next run — measured 6.8 s of the 8.3 s t40 bench time). Sized
       // so every stage compiled during warm-up is still cached when the
-      // same plan runs against the timed corpus.
+      // same plan runs against the timed corpus. The cache is keyed by
+      // (classloader, code): with session isolation on, every stream
+      // restart runs its tasks in a new per-session classloader and the
+      // cache is useless to it, so streams open through
+      // EventStreams.streamReader, which turns isolation off.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.warehouse.dir", graft.queries.RelationalQueries.warehouseDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/codegen paths once on the smallest SF so per-query

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.ClusterHashFunctions.{cluster_node, cluster_slot}
 import graft.sources.Tables
+import graft.streaming.EventStreams
 
 /**
  * CSV and JSON legs of SURVEY.md §2.2's "parquet/CSV/JSON scan + sink"
@@ -30,6 +31,13 @@ object RelationalQueries {
   def dataRoot(kind: String, sfDir: String, leaf: String): String =
     s"/root/repo/data/graft-$kind/" +
       sfDir.replaceAll("/+$", "").replaceAll("[^A-Za-z0-9]", "_") + "/" + leaf
+
+  /** Catalog warehouse (`spark.sql.warehouse.dir`) of the Bench and
+    * Verify sessions: one directory beside the export families, so
+    * catalog tables land under the artifact root instead of in a
+    * `spark-warehouse/` under whatever directory a run starts in. One
+    * warehouse serves every scale factor; table names carry the sf. */
+  val warehouseDir: String = dataRoot("warehouse", "all-sf", "catalog")
 
   def csvDir(sfDir: String): String = dataRoot("csv", sfDir, "customer")
 
@@ -343,7 +351,8 @@ object RelationalQueries {
     // (CREATE TABLE lived only in RelationalSurfaceSpec before this).
     "p19_catalog_table" -> ((s, dir) => {
       val tbl = ensureCatalogTable(s, dir)
-      val fresh = s.newSession()
+      // a fresh session starts with artifact isolation on again
+      val fresh = EventStreams.shareGeneratedCode(s.newSession())
       fresh.table(tbl)
         .groupBy(col("node"))
         .agg(count(lit(1)).as("customers"),
@@ -378,7 +387,8 @@ object RelationalQueries {
 
   /** Ingest-once PERSISTENT catalog table: customer with its cluster
     * slot/node, bucketed by slot, saved through the session catalog
-    * into the warehouse (spark-warehouse/). Readers get it back by
+    * into the session warehouse ([[warehouseDir]] under Bench and
+    * Verify). Readers get it back by
     * NAME via `spark.table` — no path, no temp view — the metadata
     * that outlives a session. Slot and node are computed at WRITE
     * time, so a reading session needs no function registration. */

@@ -126,7 +126,7 @@ object StreamingQueries {
     val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(out), true)
     val reqSchema = s.read.parquet(s"$reqRoot/r0").schema
-    val qstream = s.readStream.schema(reqSchema)
+    val qstream = EventStreams.streamReader(s).schema(reqSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$reqRoot/r*")
     // resolve the index relation ONCE: every micro-batch filters this
@@ -319,7 +319,7 @@ object StreamingQueries {
   /** The late-arrival stream over the hash-split export — one file per
     * micro-batch, ten batches, same normalized schema as [[splitEventStream]]. */
   def hashSplitEventStream(s: SparkSession, dir: String): DataFrame =
-    s.readStream
+    EventStreams.streamReader(s)
       .schema(splitEventSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"${ensureHashSplitEvents(s, dir)}/*/part*")
@@ -327,7 +327,7 @@ object StreamingQueries {
   /** The s52 stream: one file per micro-batch over the time-split
     * export — the engine merges session state ACROSS batches. */
   def splitEventStream(s: SparkSession, dir: String): DataFrame =
-    s.readStream
+    EventStreams.streamReader(s)
       .schema(splitEventSchema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"${ensureTimeSplitEvents(s, dir)}/*/part*")
@@ -716,7 +716,7 @@ object StreamingQueries {
       val embSchema = s.read.parquet(s"$dir/embeddings.parquet").schema
       // the request stream: 50 query vectors arriving online (glob — see
       // the eventStream scaladoc for the single-file basePath gotcha)
-      val qstream = s.readStream.schema(embSchema)
+      val qstream = EventStreams.streamReader(s).schema(embSchema)
         .parquet(s"$dir/embeddings.parque*")
         .where($"vec_id" < 50)
       // the SAME probe+score stage as the batch s37/s60 path — shared
@@ -795,7 +795,7 @@ object StreamingQueries {
       val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(out), true)
       val schema = s.read.parquet(s"$reqRoot/b0").schema
-      val stream = s.readStream.schema(schema)
+      val stream = EventStreams.streamReader(s).schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$reqRoot/b*")
       s87BatchPins = Map.empty
@@ -920,7 +920,7 @@ object StreamingQueries {
       val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(out), true)
       val schema = s.read.parquet(s"$reqRoot/b0").schema
-      val stream = s.readStream.schema(schema)
+      val stream = EventStreams.streamReader(s).schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$reqRoot/b*")
       s94BatchPins = Map.empty
@@ -1058,7 +1058,7 @@ object StreamingQueries {
           .map { case (u, tsUs, id, et) =>
             (u, EventStreams.LastSeenEvent(tsUs, id, et)) }
           .groupByKey(_._1).mapValues(_._2)
-        val ev = s.readStream.schema(splitEventSchema)
+        val ev = EventStreams.streamReader(s).schema(splitEventSchema)
           .parquet(s"$root/b/part*")
           .where(nullOk)
           .select(col("event_id"), col("ts"), col("user_id"),
@@ -1254,7 +1254,7 @@ object StreamingQueries {
           // restart must ask for the same (see runToTable's rationale)
           s.conf.set("spark.sql.shuffle.partitions", "4")
           val sess = sessionAgg(
-            s.readStream.schema(splitEventSchema).parquet(srcDir))
+            EventStreams.streamReader(s).schema(splitEventSchema).parquet(srcDir))
           val q = sess.writeStream
             .outputMode(OutputMode.Append())
             .format("parquet")

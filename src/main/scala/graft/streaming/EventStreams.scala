@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamReader, ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, StreamingQuery, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types._
 
 /**
@@ -34,6 +34,38 @@ object EventStreams {
     StructField("event_type", StringType),
     StructField("value", DoubleType),
     StructField("props", StringType)))
+
+  /** Lets every session cloned from `spark` reuse the generated classes
+    * this JVM has already compiled; returns `spark`.
+    *
+    * Spark 4.1 keys `CodeGenerator`'s generated-class cache by
+    * (classloader, code), not by code alone. Each `writeStream.start()`
+    * clones its session, the clone gets a fresh session UUID, and while
+    * `spark.sql.artifact.isolation.enabled` keeps its default the
+    * executor builds a new classloader per session UUID
+    * (`Executor.isolatedSessionCache`). With that default, every
+    * checkpointed `AvailableNow` restart misses the cache and janino
+    * recompiles every stage, byte-identical code included (a perfbench
+    * stream_ingest round loads ~62 generated classes that way). With
+    * isolation off, the executor runs every session's tasks in the
+    * default classloader, so a restart compiles only the code that
+    * really changed: the predicate that carries the new watermark
+    * literal (2 class loads per round). graft adds no session
+    * artifacts (jars, files, REPL classes), so isolation buys it
+    * nothing. The setting is read lazily by each clone from its own copy
+    * of the conf, so setting it on the caller's session at run time is
+    * enough — the same pattern as `nanosAsLong` in [[readEventStream]].
+    * A fresh `newSession()` starts with isolation on again and must
+    * pass through here too (p19). */
+  def shareGeneratedCode(spark: SparkSession): SparkSession = {
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    spark
+  }
+
+  /** `spark.readStream` through [[shareGeneratedCode]]: the one way a
+    * stream is opened in graft, so no restart recompiles its stages. */
+  def streamReader(spark: SparkSession): DataStreamReader =
+    shareGeneratedCode(spark).readStream
 
   /** File-source stream over an events parquet location. The schema is
     * inferred from the files via a batch read of `schemaPath` (a
@@ -72,7 +104,7 @@ object EventStreams {
         case _: java.io.FileNotFoundException => eventSchema
       }
     graft.sources.Tables.nanosTsToTimestamp(spark,
-      spark.readStream
+      streamReader(spark)
         .schema(onDisk)
         .parquet(streamPath))
   }

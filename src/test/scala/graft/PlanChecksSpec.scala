@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.DynamicPruningExpression
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
@@ -12,8 +15,10 @@ class PlanChecksSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf0001
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+  private def executedPlan(name: String): SparkPlan =
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan
+
+  private def plan(name: String): String = executedPlan(name).toString
 
   test("a10: shipdate filter is pushed to the parquet scan") {
     val p = plan("a10_pricing_summary")
@@ -357,20 +362,37 @@ class PlanChecksSpec extends AnyFunSuite {
     assert(scan.isDefined && scan.get.contains("__cid"), s"index scan: $scan\n${p.take(2000)}")
   }
 
+  /** The partition-filtered scans of generation `gen`'s IVF-prod index
+    * (`…/graft-ivf-prod/…/<gen>/index`) in an executed plan, found node
+    * by node: the rendered plan cuts a scan's Location at
+    * `spark.sql.maxMetadataStringLength`, so matching the path in the
+    * plan text breaks whenever the data root gets longer. */
+  private def genIndexScans(p: SparkPlan, gen: String): Seq[FileSourceScanExec] =
+    new AdaptiveSparkPlanHelper {}.collect(p) {
+      case f: FileSourceScanExec if f.partitionFilters.nonEmpty &&
+          f.relation.location.rootPaths.exists(root =>
+            root.toString.contains("graft-ivf-prod") &&
+              root.getName == "index" && root.getParent.getName == gen) => f
+    }
+
+  /** The scan carries a runtime (DPP) partition filter on `__cid`. */
+  private def dynamicallyPrunedOnCid(f: FileSourceScanExec): Boolean =
+    f.partitionFilters.exists {
+      case d: DynamicPruningExpression => d.references.exists(_.name == "__cid")
+      case _ => false
+    }
+
   test("s97: gen2 serving dynamically prunes the REFRESHED index partitions") {
     // the refresh-rewrite claim at the plan level: the gen2 layout is
     // served exactly as gen1 was — the broadcast probe join injects a
     // runtime pruning subquery on the gen2 index scan specifically
     // (the guarded delta union's other branch is a plain batch-sized
     // scan; the corpus-sized side must stay partition-pruned)
-    val p = plan("s97_ann_ivf_gen2")
-    // (toString truncates the scan Location, so match the path prefix
-    // up to gen2 rather than the full .../gen2/index)
-    val scan = p.linesIterator.find(l =>
-      l.contains("graft-ivf-prod") && l.contains("gen2") && l.contains("PartitionFilters"))
-    assert(scan.isDefined, s"no gen2 index scan in plan:\n${p.take(2000)}")
-    assert(scan.get.contains("dynamicpruningexpression") && scan.get.contains("__cid"),
-      s"gen2 scan not dynamically pruned: ${scan.get}")
+    val p = executedPlan("s97_ann_ivf_gen2")
+    val scans = genIndexScans(p, "gen2")
+    assert(scans.nonEmpty, s"no gen2 index scan in plan:\n${p.toString.take(2000)}")
+    assert(scans.forall(dynamicallyPrunedOnCid),
+      s"gen2 scan not dynamically pruned: ${scans.map(_.partitionFilters)}")
   }
 
   test("s101: gen3 serving dynamically prunes the TWICE-refreshed index partitions") {
@@ -378,24 +400,23 @@ class PlanChecksSpec extends AnyFunSuite {
     // construction built from its own output serves exactly as its
     // input generation did — DPP on the gen3 index scan through the
     // guarded union (the chained delta branch is batch-sized)
-    val p = plan("s101_ann_ivf_gen3")
-    val scan = p.linesIterator.find(l =>
-      l.contains("graft-ivf-prod") && l.contains("gen3") && l.contains("PartitionFilters"))
-    assert(scan.isDefined, s"no gen3 index scan in plan:\n${p.take(2000)}")
-    assert(scan.get.contains("dynamicpruningexpression") && scan.get.contains("__cid"),
-      s"gen3 scan not dynamically pruned: ${scan.get}")
+    val p = executedPlan("s101_ann_ivf_gen3")
+    val scans = genIndexScans(p, "gen3")
+    assert(scans.nonEmpty, s"no gen3 index scan in plan:\n${p.toString.take(2000)}")
+    assert(scans.forall(dynamicallyPrunedOnCid),
+      s"gen3 scan not dynamically pruned: ${scans.map(_.partitionFilters)}")
   }
 
   test("s103: deleted gen2 serving keeps DPP and broadcasts the tombstone anti-join") {
     // deletes must not cost the plan shape: the tombstone set is
     // metadata-sized (broadcast anti-join), and the corpus-sized gen2
     // index scan stays partition-pruned under it
-    val p = plan("s103_ann_ivf_gen2_delete")
-    val scan = p.linesIterator.find(l =>
-      l.contains("graft-ivf-prod") && l.contains("gen2") && l.contains("PartitionFilters"))
-    assert(scan.isDefined, s"no gen2 index scan in plan:\n${p.take(2000)}")
-    assert(scan.get.contains("dynamicpruningexpression") && scan.get.contains("__cid"),
-      s"gen2 scan not dynamically pruned under the delete: ${scan.get}")
+    val ep = executedPlan("s103_ann_ivf_gen2_delete")
+    val p = ep.toString
+    val scans = genIndexScans(ep, "gen2")
+    assert(scans.nonEmpty, s"no gen2 index scan in plan:\n${p.take(2000)}")
+    assert(scans.forall(dynamicallyPrunedOnCid),
+      s"gen2 scan not dynamically pruned under the delete: ${scans.map(_.partitionFilters)}")
     assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
       s"tombstone anti-join must be broadcast:\n${p.take(3000)}")
   }
