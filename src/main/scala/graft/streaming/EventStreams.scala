@@ -36,7 +36,8 @@ object EventStreams {
     StructField("props", StringType)))
 
   /** Lets every session cloned from `spark` reuse the generated classes
-    * this JVM has already compiled; returns `spark`.
+    * this JVM has already compiled, and write its `file:` checkpoints
+    * without forking; returns `spark`.
     *
     * Spark 4.1 keys `CodeGenerator`'s generated-class cache by
     * (classloader, code), not by code alone. Each `writeStream.start()`
@@ -56,14 +57,28 @@ object EventStreams {
     * of the conf, so setting it on the caller's session at run time is
     * enough — the same pattern as `nanosAsLong` in [[readEventStream]].
     * A fresh `newSession()` starts with isolation on again and must
-    * pass through here too (p19). */
+    * pass through here too (p19).
+    *
+    * Checkpoint files: Spark's default manager writes `file:` paths
+    * through Hadoop's `FileContext`, which starts a `chmod` or
+    * `readlink` shell process for every temp file, rename and directory
+    * — over 200 forks per perfbench stream_ingest round.
+    * [[LocalCheckpointFileManager]] does the same atomic writes with
+    * `java.nio` system calls and leaves every other scheme to Spark's
+    * default. It is installed through Spark's own setting, only where
+    * the session names no manager, so a configured manager always wins;
+    * clones read the setting like the one above. */
   def shareGeneratedCode(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    if (spark.conf.getOption(LocalCheckpointFileManager.ConfKey).isEmpty)
+      spark.conf.set(LocalCheckpointFileManager.ConfKey,
+        classOf[LocalCheckpointFileManager].getName)
     spark
   }
 
   /** `spark.readStream` through [[shareGeneratedCode]]: the one way a
-    * stream is opened in graft, so no restart recompiles its stages. */
+    * stream is opened in graft, so no restart recompiles its stages or
+    * forks to write its checkpoint. */
   def streamReader(spark: SparkSession): DataStreamReader =
     shareGeneratedCode(spark).readStream
 

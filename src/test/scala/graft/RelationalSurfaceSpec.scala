@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.ClusterHashFunctions
+import graft.SparkTestSession.withTempDir
 
 /**
  * Remaining host-engine surface from SURVEY.md §2.2/§2.3: SQL DDL
@@ -15,64 +16,72 @@ class RelationalSurfaceSpec extends AnyFunSuite {
 
   test("CREATE TABLE + INSERT + SELECT with cluster functions (README.md:74-85)") {
     ClusterHashFunctions.register(spark)
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh")
-    spark.sql("DROP TABLE IF EXISTS user_keys")
-    spark.sql(s"CREATE TABLE user_keys (key STRING) USING parquet LOCATION '$wh/user_keys'")
-    spark.sql("INSERT INTO user_keys VALUES ('user:1000'), ('product:5432'), ('{user:1000}:profile')")
-    val rows = spark.sql(
-      "SELECT key, cluster_slot(key) AS slot FROM user_keys ORDER BY key").collect()
-    assert(rows.map(r => r.getString(0) -> r.getInt(1)).toSeq == Seq(
-      "product:5432" -> 13236, "user:1000" -> 1649, "{user:1000}:profile" -> 1649))
-    spark.sql("DROP TABLE user_keys")
+    withTempDir("wh") { wh =>
+      spark.sql("DROP TABLE IF EXISTS user_keys")
+      spark.sql(s"CREATE TABLE user_keys (key STRING) USING parquet LOCATION '$wh/user_keys'")
+      spark.sql("INSERT INTO user_keys VALUES ('user:1000'), ('product:5432'), ('{user:1000}:profile')")
+      val rows = spark.sql(
+        "SELECT key, cluster_slot(key) AS slot FROM user_keys ORDER BY key").collect()
+      assert(rows.map(r => r.getString(0) -> r.getInt(1)).toSeq == Seq(
+        "product:5432" -> 13236, "user:1000" -> 1649, "{user:1000}:profile" -> 1649))
+      spark.sql("DROP TABLE user_keys")
+    }
   }
 
   test("CTAS from range table function (README.md:110-120)") {
     ClusterHashFunctions.register(spark)
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh2")
-    spark.sql("DROP TABLE IF EXISTS synth_keys")
-    spark.sql(
-      s"""CREATE TABLE synth_keys USING parquet LOCATION '$wh/synth_keys' AS
-         |SELECT 'user:' || id AS key FROM range(1, 1001)""".stripMargin)
-    val counts = spark.sql(
-      """SELECT cluster_node(key) AS node, count(*) AS cnt
-        |FROM synth_keys GROUP BY 1 ORDER BY 1""".stripMargin)
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    assert(counts == Map(1 -> 167L, 2 -> 165L, 3 -> 167L, 4 -> 170L, 5 -> 168L, 6 -> 163L))
-    spark.sql("DROP TABLE synth_keys")
+    withTempDir("wh2") { wh =>
+      spark.sql("DROP TABLE IF EXISTS synth_keys")
+      spark.sql(
+        s"""CREATE TABLE synth_keys USING parquet LOCATION '$wh/synth_keys' AS
+           |SELECT 'user:' || id AS key FROM range(1, 1001)""".stripMargin)
+      val counts = spark.sql(
+        """SELECT cluster_node(key) AS node, count(*) AS cnt
+          |FROM synth_keys GROUP BY 1 ORDER BY 1""".stripMargin)
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(counts == Map(1 -> 167L, 2 -> 165L, 3 -> 167L, 4 -> 170L, 5 -> 168L, 6 -> 163L))
+      spark.sql("DROP TABLE synth_keys")
+    }
   }
 
   test("csv source/sink round-trip preserves data") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    val src = spark.read.parquet(s"${SparkTestSession.sf0001}/nation.parquet")
-    src.write.mode("overwrite").option("header", "true").csv(dir)
-    val back = spark.read.option("header", "true").option("inferSchema", "true").csv(dir)
-    assert(back.count() == src.count())
-    assert(back.select(sum($"n_nationkey")).head().getLong(0) ==
-      src.select(sum($"n_nationkey")).head().getLong(0))
+    withTempDir("csv") { dirPath =>
+      val dir = dirPath.toString
+      val src = spark.read.parquet(s"${SparkTestSession.sf0001}/nation.parquet")
+      src.write.mode("overwrite").option("header", "true").csv(dir)
+      val back = spark.read.option("header", "true").option("inferSchema", "true").csv(dir)
+      assert(back.count() == src.count())
+      assert(back.select(sum($"n_nationkey")).head().getLong(0) ==
+        src.select(sum($"n_nationkey")).head().getLong(0))
+    }
   }
 
   test("json source/sink round-trip preserves data") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toString
-    val src = spark.read.parquet(s"${SparkTestSession.sf0001}/region.parquet")
-    src.write.mode("overwrite").json(dir)
-    val back = spark.read.json(dir)
-    assert(back.count() == src.count())
-    assert(back.select("r_name").collect().map(_.getString(0)).sorted.toSeq ==
-      src.select("r_name").collect().map(_.getString(0)).sorted.toSeq)
+    withTempDir("json") { dirPath =>
+      val dir = dirPath.toString
+      val src = spark.read.parquet(s"${SparkTestSession.sf0001}/region.parquet")
+      src.write.mode("overwrite").json(dir)
+      val back = spark.read.json(dir)
+      assert(back.count() == src.count())
+      assert(back.select("r_name").collect().map(_.getString(0)).sorted.toSeq ==
+        src.select("r_name").collect().map(_.getString(0)).sorted.toSeq)
+    }
   }
 
   test("orc source/sink round-trip preserves data and schema") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc").toString
-    val src = spark.read.parquet(s"${SparkTestSession.sf0001}/nation.parquet")
-    src.write.mode("overwrite").orc(dir)
-    val back = spark.read.orc(dir)
-    assert(back.schema == src.schema, "ORC preserves types exactly")
-    assert(back.count() == src.count())
-    assert(back.select(sum($"n_nationkey")).head().getLong(0) ==
-      src.select(sum($"n_nationkey")).head().getLong(0))
+    withTempDir("orc") { dirPath =>
+      val dir = dirPath.toString
+      val src = spark.read.parquet(s"${SparkTestSession.sf0001}/nation.parquet")
+      src.write.mode("overwrite").orc(dir)
+      val back = spark.read.orc(dir)
+      assert(back.schema == src.schema, "ORC preserves types exactly")
+      assert(back.count() == src.count())
+      assert(back.select(sum($"n_nationkey")).head().getLong(0) ==
+        src.select(sum($"n_nationkey")).head().getLong(0))
+    }
   }
 
   test("c60/j61 oracle SQL tracks the verified run's export path") {

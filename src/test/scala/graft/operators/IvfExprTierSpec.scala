@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 import graft.functions.CentroidFunctions
 
 /** The scan-local EXPRESSION tier's contract: bit-identical answers to
@@ -141,8 +142,8 @@ class IvfExprTierSpec extends AnyFunSuite {
 
   test("rankAgg on an on-disk index: the fused kernel reads only the probed lists") {
     import TopKEdgeCases.full
-    val dir = java.nio.file.Files.createTempDirectory("ivf-fused-index").toString
-    try {
+    withTempDir("ivf-fused-index") { dirPath =>
+      val dir = dirPath.toString
       Similarity.ivfAssignedByExpr(cents16, emb).write.partitionBy("__cid")
         .mode("overwrite").parquet(dir)
       val index = spark.read.parquet(dir)
@@ -154,7 +155,7 @@ class IvfExprTierSpec extends AnyFunSuite {
       assert(seen.plans.exists(_.linesIterator.exists(l =>
         l.contains("PartitionFilters") && l.contains("__cid"))), seen.plans)
       assert(seen.shuffleWrite == 0)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    }
   }
 
   test("rankAgg IVF edges: ties, zero and NULL vectors, self-pairs, big k, empty partitions, duplicate ids") {

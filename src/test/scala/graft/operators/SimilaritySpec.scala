@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 
 class SimilaritySpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -458,15 +459,17 @@ class SimilaritySpec extends AnyFunSuite {
     val corpus = graft.sources.Tables.load(spark, SparkTestSession.sf0001, "embeddings")
     val queries = corpus.where($"vec_id" < 5)
     val cents = Similarity.kmeansCentroids(corpus, nlist = 16, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-spec").toString
-    Similarity.ivfAssigned(cents, corpus)
-      .write.mode("overwrite").partitionBy("__cid").parquet(dir)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("query_id", "nbr_id", "rank").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val mem = rows(Similarity.ivfTopKWith(cents, corpus, queries, k = 10))
-    val disk = rows(Similarity.ivfTopKOnIndex(cents, spark.read.parquet(dir), queries, k = 10))
-    assert(mem == disk, s"diverged: mem-only=${(mem -- disk).take(3)} disk-only=${(disk -- mem).take(3)}")
+    withTempDir("ivf-spec") { dirPath =>
+      val dir = dirPath.toString
+      Similarity.ivfAssigned(cents, corpus)
+        .write.mode("overwrite").partitionBy("__cid").parquet(dir)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("query_id", "nbr_id", "rank").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      val mem = rows(Similarity.ivfTopKWith(cents, corpus, queries, k = 10))
+      val disk = rows(Similarity.ivfTopKOnIndex(cents, spark.read.parquet(dir), queries, k = 10))
+      assert(mem == disk, s"diverged: mem-only=${(mem -- disk).take(3)} disk-only=${(disk -- mem).take(3)}")
+    }
   }
 
   test("embedDecontaminate drops exactly the brute-force over-threshold set") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 import graft.core.ClusterHash
 import graft.functions.ClusterHashFunctions.cluster_node
 
@@ -39,18 +40,20 @@ class SlotPartitioningSpec extends AnyFunSuite {
   }
 
   test("shard-aligned write produces one directory per node with pruning") {
-    val dir = java.nio.file.Files.createTempDirectory("shard_aligned").toString
-    SlotPartitioning.writeShardAligned(customer, $"key", dir)
-    val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq == (1 to 6).map(n => s"node=$n"))
-    // partition pruning: reading one shard scans only its directory
-    val one = spark.read.parquet(dir).where($"node" === 3)
-    val scanned = one.queryExecution.executedPlan.toString
-    assert(scanned.contains("PartitionFilters: [isnotnull(node"), scanned)
-    // round-trip correctness vs the core
-    val bad = one.select($"key").collect()
-      .count(r => ClusterHash.getNode(r.getString(0)) != 3)
-    assert(bad == 0)
+    withTempDir("shard_aligned") { dirPath =>
+      val dir = dirPath.toString
+      SlotPartitioning.writeShardAligned(customer, $"key", dir)
+      val dirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).sorted
+      assert(dirs.toSeq == (1 to 6).map(n => s"node=$n"))
+      // partition pruning: reading one shard scans only its directory
+      val one = spark.read.parquet(dir).where($"node" === 3)
+      val scanned = one.queryExecution.executedPlan.toString
+      assert(scanned.contains("PartitionFilters: [isnotnull(node"), scanned)
+      // round-trip correctness vs the core
+      val bad = one.select($"key").collect()
+        .count(r => ClusterHash.getNode(r.getString(0)) != 3)
+      assert(bad == 0)
+    }
   }
 
   test("salted join is row-identical to the plain join and spreads hot keys") {

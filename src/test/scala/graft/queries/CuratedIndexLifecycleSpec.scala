@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 
 /**
  * Lifecycle contract of the CURATED-corpus index (s72/s73): the index
@@ -36,37 +37,37 @@ class CuratedIndexLifecycleSpec extends AnyFunSuite {
       .write.mode(mode).parquet(s"$dir/documents.parquet")
 
   test("curated index: fresh ensure is a no-op; corpus regeneration rebuilds with a new stamp") {
-    val d = Files.createTempDirectory("graft-curated-life")
-    d.toFile.deleteOnExit()
-    val dir = d.toString
-    writeDocs(dir, 0 until 40, "overwrite")
+    withTempDir("curated-life") { d =>
+      val dir = d.toString
+      writeDocs(dir, 0 until 40, "overwrite")
 
-    val root = PipelineQueries.ensureCuratedIndexExport(spark, dir)
-    val marker = Paths.get(root, "_SUCCESS")
-    assert(Files.exists(marker))
-    val stamp1 = new String(Files.readAllBytes(marker), "UTF-8")
-    assert(stamp1 === RelationalQueries.srcDigest(dir, "documents") + ":curated-v2",
-      "the marker must record the curation INPUT's digest plus the layout version")
-    val indexed1 = spark.read.parquet(s"$root/index").count()
-    assert(indexed1 >= 8, s"curation should keep enough chunks to train on: $indexed1")
-    val mtime1 = Files.getLastModifiedTime(marker)
+      val root = PipelineQueries.ensureCuratedIndexExport(spark, dir)
+      val marker = Paths.get(root, "_SUCCESS")
+      assert(Files.exists(marker))
+      val stamp1 = new String(Files.readAllBytes(marker), "UTF-8")
+      assert(stamp1 === RelationalQueries.srcDigest(dir, "documents") + ":curated-v2",
+        "the marker must record the curation INPUT's digest plus the layout version")
+      val indexed1 = spark.read.parquet(s"$root/index").count()
+      assert(indexed1 >= 8, s"curation should keep enough chunks to train on: $indexed1")
+      val mtime1 = Files.getLastModifiedTime(marker)
 
-    // fresh ensure: nothing rebuilds (the marker is not rewritten)
-    PipelineQueries.ensureCuratedIndexExport(spark, dir)
-    assert(Files.getLastModifiedTime(marker) === mtime1,
-      "a fresh ensure must not rebuild the index")
+      // fresh ensure: nothing rebuilds (the marker is not rewritten)
+      PipelineQueries.ensureCuratedIndexExport(spark, dir)
+      assert(Files.getLastModifiedTime(marker) === mtime1,
+        "a fresh ensure must not rebuild the index")
 
-    // the corpus regenerates (new part file → new listing digest):
-    // the whole artifact must rebuild under the NEW stamp
-    writeDocs(dir, 40 until 60, "append")
-    val root2 = PipelineQueries.ensureCuratedIndexExport(spark, dir)
-    assert(root2 === root)
-    val stamp2 = new String(Files.readAllBytes(marker), "UTF-8")
-    assert(stamp2 !== stamp1, "a regenerated corpus must produce a new digest stamp")
-    assert(stamp2 === RelationalQueries.srcDigest(dir, "documents") + ":curated-v2")
-    val indexed2 = spark.read.parquet(s"$root/index").count()
-    assert(indexed2 > indexed1,
-      s"the rebuilt index must cover the grown corpus ($indexed1 -> $indexed2)")
+      // the corpus regenerates (new part file → new listing digest):
+      // the whole artifact must rebuild under the NEW stamp
+      writeDocs(dir, 40 until 60, "append")
+      val root2 = PipelineQueries.ensureCuratedIndexExport(spark, dir)
+      assert(root2 === root)
+      val stamp2 = new String(Files.readAllBytes(marker), "UTF-8")
+      assert(stamp2 !== stamp1, "a regenerated corpus must produce a new digest stamp")
+      assert(stamp2 === RelationalQueries.srcDigest(dir, "documents") + ":curated-v2")
+      val indexed2 = spark.read.parquet(s"$root/index").count()
+      assert(indexed2 > indexed1,
+        s"the rebuilt index must cover the grown corpus ($indexed1 -> $indexed2)")
+    }
   }
 
   test("curated index: the trained centroids are a pure function of the corpus") {
@@ -75,13 +76,13 @@ class CuratedIndexLifecycleSpec extends AnyFunSuite {
     // centroids are reproducible and serving answers cannot drift
     // between builds
     def build(): (Array[Array[Double]], Long) = {
-      val d = Files.createTempDirectory("graft-curated-det")
-      d.toFile.deleteOnExit()
-      writeDocs(d.toString, 0 until 40, "overwrite")
-      val root = PipelineQueries.ensureCuratedIndexExport(spark, d.toString)
-      (spark.read.parquet(s"$root/centroids").orderBy("cid").collect()
-        .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toArray),
-        spark.read.parquet(s"$root/index").count())
+      withTempDir("curated-det") { d =>
+        writeDocs(d.toString, 0 until 40, "overwrite")
+        val root = PipelineQueries.ensureCuratedIndexExport(spark, d.toString)
+        (spark.read.parquet(s"$root/centroids").orderBy("cid").collect()
+          .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toArray),
+          spark.read.parquet(s"$root/index").count())
+      }
     }
     val (a, chunksA) = build()
     val (b, _) = build()
@@ -146,12 +147,12 @@ class CuratedIndexLifecycleSpec extends AnyFunSuite {
     // boundary must train DIFFERENT list counts (and the trained count
     // must be exactly what the API derives from the surviving chunks).
     def build(nDocs: Int): (Long, Long) = {
-      val d = Files.createTempDirectory("graft-curated-size")
-      d.toFile.deleteOnExit()
-      writeDocs(d.toString, 0 until nDocs, "overwrite")
-      val root = PipelineQueries.ensureCuratedIndexExport(spark, d.toString)
-      (spark.read.parquet(s"$root/index").count(),
-        spark.read.parquet(s"$root/centroids").count())
+      withTempDir("curated-size") { d =>
+        writeDocs(d.toString, 0 until nDocs, "overwrite")
+        val root = PipelineQueries.ensureCuratedIndexExport(spark, d.toString)
+        (spark.read.parquet(s"$root/index").count(),
+          spark.read.parquet(s"$root/centroids").count())
+      }
     }
     val (smallChunks, smallN) = build(40)
     val (bigChunks, bigN) = build(600)

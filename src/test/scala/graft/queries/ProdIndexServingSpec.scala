@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 import graft.operators.Similarity
 
 /**
@@ -399,52 +400,54 @@ class ProdIndexServingSpec extends AnyFunSuite {
     // link must never resurrect at the next)
     PipelineQueries.ensureIvfProdGen3TombstoneExport(spark, dir)
     val gen3 = s"$root/gen3"
-    val gen4 = Files.createTempDirectory("graft-gen4").toString
-    val want = s"${PipelineQueries.genStampOf(gen3)}:gen4-refresh-v1"
-    PipelineQueries.rollGeneration(spark,
-      PipelineQueries.deletedServingFrame(spark, gen3)
-        .select($"nbr_id".as("vec_id"), $"cvec".as("embedding")),
-      PipelineQueries.readCentroids(spark, s"$gen3/centroids"), gen4, want)
-    // the rolled generation holds exactly the frame its input served
-    val g4 = spark.read.parquet(s"$gen4/index")
-    val srv = PipelineQueries.deletedServingFrame(spark, gen3)
-    assert(g4.count() === srv.count())
-    assert(g4.select("nbr_id").except(srv.select("nbr_id")).count() === 0)
-    // both retire rules are folded out FOR THE ROWS THEY NAMED:
-    // tombstones retire ids, not an eternal predicate — ≡3 covered
-    // all four arms (gone everywhere), while the ≡7 rule predates
-    // delta3, whose ≡7 ids were never retired and rightly survive
-    assert(g4.where($"nbr_id" % 10 === 3).count() === 0)
-    assert(g4.where($"nbr_id" % 10 === 7 && $"nbr_id" < 300000000L).count() === 0)
-    assert(g4.where($"nbr_id" % 10 === 7 && $"nbr_id" >= 300000000L).count() > 0,
-      "delta3's post-rule ≡7 ids must survive — a tombstone names rows, not a law")
-    // its stamp chains to gen3's, hence transitively to the base —
-    // four links now derive from one root stamp
-    assert(PipelineQueries.genStampOf(gen4) === want)
-    assert(want.startsWith(PipelineQueries.genStampOf(root)))
-    // both matrices persist at link 3, so every tier serves: hier at
-    // cprobe = ncoarse answers row-identically to flat over gen4
-    val fine = PipelineQueries.readCentroids(spark, s"$gen4/centroids")
-    val coarse = PipelineQueries.readCentroids(spark, s"$gen4/coarse", idCol = "kid")
-    assert(fine.length === PipelineQueries.prodNlist)
-    val q = emb.where($"vec_id" < 3)
-    val flat = Similarity.ivfTopKOnIndexByExpr(fine, g4, q, k = 10)
-      .select($"query_id", $"nbr_id", $"rank").orderBy("query_id", "rank").collect()
-    val hier = Similarity.hierTopKOnIndexByExpr(coarse, fine, g4, q, k = 10,
-        cprobe = coarse.length)
-      .select($"query_id", $"nbr_id", $"rank").orderBy("query_id", "rank").collect()
-    assert(flat.nonEmpty && flat.toSeq === hier.toSeq)
-    // and a gen3-stamped landing refuses against gen4, as at every link
-    val staleDir = s"$gen4/delta-stale-test"
-    PipelineQueries.landDelta(
-      Similarity.ivfAssignedByExpr(fine, emb.where($"vec_id" < 5)
-        .select(($"vec_id" + 5000000L).as("vec_id"), $"embedding")),
-      PipelineQueries.genStampOf(gen3), staleDir)
-    val ex = intercept[IllegalArgumentException] {
-      PipelineQueries.guardedDeltaUnion(spark, gen4, staleDir)
+    withTempDir("gen4") { gen4Path =>
+      val gen4 = gen4Path.toString
+      val want = s"${PipelineQueries.genStampOf(gen3)}:gen4-refresh-v1"
+      PipelineQueries.rollGeneration(spark,
+        PipelineQueries.deletedServingFrame(spark, gen3)
+          .select($"nbr_id".as("vec_id"), $"cvec".as("embedding")),
+        PipelineQueries.readCentroids(spark, s"$gen3/centroids"), gen4, want)
+      // the rolled generation holds exactly the frame its input served
+      val g4 = spark.read.parquet(s"$gen4/index")
+      val srv = PipelineQueries.deletedServingFrame(spark, gen3)
+      assert(g4.count() === srv.count())
+      assert(g4.select("nbr_id").except(srv.select("nbr_id")).count() === 0)
+      // both retire rules are folded out FOR THE ROWS THEY NAMED:
+      // tombstones retire ids, not an eternal predicate — ≡3 covered
+      // all four arms (gone everywhere), while the ≡7 rule predates
+      // delta3, whose ≡7 ids were never retired and rightly survive
+      assert(g4.where($"nbr_id" % 10 === 3).count() === 0)
+      assert(g4.where($"nbr_id" % 10 === 7 && $"nbr_id" < 300000000L).count() === 0)
+      assert(g4.where($"nbr_id" % 10 === 7 && $"nbr_id" >= 300000000L).count() > 0,
+        "delta3's post-rule ≡7 ids must survive — a tombstone names rows, not a law")
+      // its stamp chains to gen3's, hence transitively to the base —
+      // four links now derive from one root stamp
+      assert(PipelineQueries.genStampOf(gen4) === want)
+      assert(want.startsWith(PipelineQueries.genStampOf(root)))
+      // both matrices persist at link 3, so every tier serves: hier at
+      // cprobe = ncoarse answers row-identically to flat over gen4
+      val fine = PipelineQueries.readCentroids(spark, s"$gen4/centroids")
+      val coarse = PipelineQueries.readCentroids(spark, s"$gen4/coarse", idCol = "kid")
+      assert(fine.length === PipelineQueries.prodNlist)
+      val q = emb.where($"vec_id" < 3)
+      val flat = Similarity.ivfTopKOnIndexByExpr(fine, g4, q, k = 10)
+        .select($"query_id", $"nbr_id", $"rank").orderBy("query_id", "rank").collect()
+      val hier = Similarity.hierTopKOnIndexByExpr(coarse, fine, g4, q, k = 10,
+          cprobe = coarse.length)
+        .select($"query_id", $"nbr_id", $"rank").orderBy("query_id", "rank").collect()
+      assert(flat.nonEmpty && flat.toSeq === hier.toSeq)
+      // and a gen3-stamped landing refuses against gen4, as at every link
+      val staleDir = s"$gen4/delta-stale-test"
+      PipelineQueries.landDelta(
+        Similarity.ivfAssignedByExpr(fine, emb.where($"vec_id" < 5)
+          .select(($"vec_id" + 5000000L).as("vec_id"), $"embedding")),
+        PipelineQueries.genStampOf(gen3), staleDir)
+      val ex = intercept[IllegalArgumentException] {
+        PipelineQueries.guardedDeltaUnion(spark, gen4, staleDir)
+      }
+      assert(ex.getMessage.contains("stale-generation delta refuses to serve"))
+      RelationalQueries.wipeDir(gen4)
     }
-    assert(ex.getMessage.contains("stale-generation delta refuses to serve"))
-    RelationalQueries.wipeDir(gen4)
   }
 
   test("gen3 hier serving degenerates to gen3 flat at cprobe = ncoarse") {

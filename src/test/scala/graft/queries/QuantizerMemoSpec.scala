@@ -3,6 +3,7 @@ package graft.queries
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 
 /**
  * Contract tests for the trained-quantizer memo (PipelineQueries):
@@ -15,39 +16,39 @@ class QuantizerMemoSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def freshCorpus(): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-memo")
-    d.toFile.deleteOnExit()
+  private def withFreshCorpus[T](body: String => T): T = withTempDir("memo") { d =>
     val dir = d.toString
     val rnd = new scala.util.Random(7)
     (0L until 20L).map(i => (i, Seq.fill(64)(rnd.nextFloat()), (i % 3).toInt))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    dir
+    body(dir)
   }
 
   test("corpusKey changes when a part file is touched in place (same entry names)") {
-    val dir = freshCorpus()
-    val before = PipelineQueries.corpusKey(dir)
-    val part = new java.io.File(s"$dir/embeddings.parquet").listFiles()
-      .filter(_.getName.startsWith("part-")).head
-    assert(part.setLastModified(part.lastModified() + 2000L))
-    val after = PipelineQueries.corpusKey(dir)
-    assert(before !== after,
-      "an in-place part-file rewrite must change the quantizer cache key")
+    withFreshCorpus { dir =>
+      val before = PipelineQueries.corpusKey(dir)
+      val part = new java.io.File(s"$dir/embeddings.parquet").listFiles()
+        .filter(_.getName.startsWith("part-")).head
+      assert(part.setLastModified(part.lastModified() + 2000L))
+      val after = PipelineQueries.corpusKey(dir)
+      assert(before !== after,
+        "an in-place part-file rewrite must change the quantizer cache key")
+    }
   }
 
   test("a corpus regeneration evicts the stale model — one live entry per dir") {
-    val dir = freshCorpus()
-    val c1 = PipelineQueries.centroids16(spark, dir)
-    assert(c1.length === 16)
-    assert(PipelineQueries.kmCache.keys.count(_.startsWith(s"$dir@")) === 1)
-    // regenerate in place: same entry names, new mtimes
-    new java.io.File(s"$dir/embeddings.parquet").listFiles()
-      .filter(_.getName.startsWith("part-"))
-      .foreach(f => assert(f.setLastModified(f.lastModified() + 2000L)))
-    PipelineQueries.centroids16(spark, dir)
-    assert(PipelineQueries.kmCache.keys.count(_.startsWith(s"$dir@")) === 1,
-      s"stale generations must be evicted: ${PipelineQueries.kmCache.keys.toSeq}")
+    withFreshCorpus { dir =>
+      val c1 = PipelineQueries.centroids16(spark, dir)
+      assert(c1.length === 16)
+      assert(PipelineQueries.kmCache.keys.count(_.startsWith(s"$dir@")) === 1)
+      // regenerate in place: same entry names, new mtimes
+      new java.io.File(s"$dir/embeddings.parquet").listFiles()
+        .filter(_.getName.startsWith("part-"))
+        .foreach(f => assert(f.setLastModified(f.lastModified() + 2000L)))
+      PipelineQueries.centroids16(spark, dir)
+      assert(PipelineQueries.kmCache.keys.count(_.startsWith(s"$dir@")) === 1,
+        s"stale generations must be evicted: ${PipelineQueries.kmCache.keys.toSeq}")
+    }
   }
 }

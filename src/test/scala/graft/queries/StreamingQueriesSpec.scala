@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 
 class StreamingQueriesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -70,56 +71,59 @@ class StreamingQueriesSpec extends AnyFunSuite {
       try listing.filter(_.getFileName.toString.startsWith("part-")).findFirst.get
       finally listing.close()
     }
-    val srcDir = Files.createTempDirectory("graft-restart-src")
-    val ckpt = Files.createTempDirectory("graft-restart-ckpt").toString
-    val outDir = Files.createTempDirectory("graft-restart-out").toString
+    withTempDir("restart") { root =>
+      def dir(name: String) = Files.createDirectories(root.resolve(name))
+      val srcDir = dir("src")
+      val ckpt = dir("ckpt").toString
+      val outDir = dir("out").toString
 
-    def sessionAgg(df: org.apache.spark.sql.DataFrame) = df
-      .withWatermark("ts", "10 minutes")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), unix_millis(col("w.start")).as("start_ts"),
-        unix_millis(col("w.end")).as("end_ts"), col("n_events"))
+      def sessionAgg(df: org.apache.spark.sql.DataFrame) = df
+        .withWatermark("ts", "10 minutes")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
+        .agg(count(lit(1)).as("n_events"))
+        .select(col("user_id"), unix_millis(col("w.start")).as("start_ts"),
+          unix_millis(col("w.end")).as("end_ts"), col("n_events"))
 
-    def runOnce(src: String, checkpoint: String, out: String): Unit = {
-      val q = sessionAgg(spark.readStream
-          .schema(StreamingQueries.splitEventSchema)
-          .option("maxFilesPerTrigger", 1).parquet(src))
-        .writeStream.outputMode(OutputMode.Append())
-        .format("parquet").option("path", out)
-        .option("checkpointLocation", checkpoint)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      def runOnce(src: String, checkpoint: String, out: String): Unit = {
+        val q = sessionAgg(spark.readStream
+            .schema(StreamingQueries.splitEventSchema)
+            .option("maxFilesPerTrigger", 1).parquet(src))
+          .writeStream.outputMode(OutputMode.Append())
+          .format("parquet").option("path", out)
+          .option("checkpointLocation", checkpoint)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
+      def rows(out: String) = spark.read.parquet(out).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+
+      // phase 1: only the first (time-earlier) half exists
+      Files.copy(half("a"), srcDir.resolve("00-a.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      runOnce(s"$srcDir/*.parquet", ckpt, outDir)
+      val afterPhase1 = rows(outDir)
+      // phase 2: new data arrives, restart from the SAME checkpoint
+      Files.copy(half("b"), srcDir.resolve("01-b.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      runOnce(s"$srcDir/*.parquet", ckpt, outDir)
+      val afterPhase2 = rows(outDir)
+
+      // never-restarted reference over the same two files
+      val ckpt2 = dir("ckpt2").toString
+      val out2 = dir("out2").toString
+      runOnce(s"$srcDir/*.parquet", ckpt2, out2)
+      val reference = rows(out2)
+
+      assert(afterPhase1.nonEmpty && afterPhase1.subsetOf(afterPhase2))
+      assert(afterPhase2 == reference,
+        s"restarted output diverged: ${(afterPhase2 -- reference).take(3)} / ${(reference -- afterPhase2).take(3)}")
+      // state genuinely crossed the restart: some session emitted after
+      // the restart STARTED in phase-1 data (its window was open state
+      // in the checkpoint when the query was stopped)
+      val maxA = spark.read.parquet(srcDir.resolve("00-a.parquet").toString)
+        .agg(max(unix_millis(col("ts")))).head().getLong(0)
+      val phase2New = afterPhase2 -- afterPhase1
+      assert(phase2New.exists(_._2 <= maxA),
+        s"no emitted session carried state across the restart (maxA=$maxA)")
     }
-    def rows(out: String) = spark.read.parquet(out).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-
-    // phase 1: only the first (time-earlier) half exists
-    Files.copy(half("a"), srcDir.resolve("00-a.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    runOnce(s"$srcDir/*.parquet", ckpt, outDir)
-    val afterPhase1 = rows(outDir)
-    // phase 2: new data arrives, restart from the SAME checkpoint
-    Files.copy(half("b"), srcDir.resolve("01-b.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    runOnce(s"$srcDir/*.parquet", ckpt, outDir)
-    val afterPhase2 = rows(outDir)
-
-    // never-restarted reference over the same two files
-    val ckpt2 = Files.createTempDirectory("graft-restart-ckpt2").toString
-    val out2 = Files.createTempDirectory("graft-restart-out2").toString
-    runOnce(s"$srcDir/*.parquet", ckpt2, out2)
-    val reference = rows(out2)
-
-    assert(afterPhase1.nonEmpty && afterPhase1.subsetOf(afterPhase2))
-    assert(afterPhase2 == reference,
-      s"restarted output diverged: ${(afterPhase2 -- reference).take(3)} / ${(reference -- afterPhase2).take(3)}")
-    // state genuinely crossed the restart: some session emitted after
-    // the restart STARTED in phase-1 data (its window was open state
-    // in the checkpoint when the query was stopped)
-    val maxA = spark.read.parquet(srcDir.resolve("00-a.parquet").toString)
-      .agg(max(unix_millis(col("ts")))).head().getLong(0)
-    val phase2New = afterPhase2 -- afterPhase1
-    assert(phase2New.exists(_._2 <= maxA),
-      s"no emitted session carried state across the restart (maxA=$maxA)")
   }
 
   /** s68's claim is "the last-event ValueState bridges micro-batches".
@@ -164,28 +168,30 @@ class StreamingQueriesSpec extends AnyFunSuite {
       (2L, new Timestamp(t0 + 5 * 60000), 7L, "purchase", 2.0),
       (3L, new Timestamp(t0 + 10 * 60000), 7L, "purchase", 3.0))
       .toDF("event_id", "ts", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("graft-s69").toString
-    rows.coalesce(1).write.mode("overwrite").parquet(dir)
-    val src = spark.readStream.schema(StreamingQueries.splitEventSchema).parquet(dir)
-    val clicks = src.where(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "10 minutes")
-    val purchases = src.where(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "10 minutes")
-    val semi = clicks.join(purchases,
-      col("user_id") === col("p_user") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
-      "left_semi")
-    spark.catalog.dropTempView("s69_probe")
-    val q = semi.writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("s69_probe")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val out = spark.table("s69_probe").collect()
-    assert(out.length == 1 && out.head.getLong(0) == 1L,
-      s"expected the click once, got ${out.toSeq}")
+    withTempDir("s69") { dirPath =>
+      val dir = dirPath.toString
+      rows.coalesce(1).write.mode("overwrite").parquet(dir)
+      val src = spark.readStream.schema(StreamingQueries.splitEventSchema).parquet(dir)
+      val clicks = src.where(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
+        .withWatermark("click_ts", "10 minutes")
+      val purchases = src.where(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+          col("ts").as("purchase_ts"))
+        .withWatermark("purchase_ts", "10 minutes")
+      val semi = clicks.join(purchases,
+        col("user_id") === col("p_user") &&
+          col("purchase_ts") >= col("click_ts") &&
+          col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"),
+        "left_semi")
+      spark.catalog.dropTempView("s69_probe")
+      val q = semi.writeStream.outputMode(OutputMode.Append())
+        .format("memory").queryName("s69_probe")
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      val out = spark.table("s69_probe").collect()
+      assert(out.length == 1 && out.head.getLong(0) == 1L,
+        s"expected the click once, got ${out.toSeq}")
+    }
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
+import graft.SparkTestSession.withTempDir
 import graft.sources.Tables
 
 class EventStreamsSpec extends AnyFunSuite {
@@ -14,29 +15,30 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("streaming hourly counts equal the batch aggregation") {
     // file sources need a directory: stage the events parquet into one
-    val dir = java.nio.file.Files.createTempDirectory("events_stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"${SparkTestSession.sf0001}/events.parquet"),
-      dir.resolve("events.parquet"))
-    val streamEvents = EventStreams.readEventStream(spark, dir.toString)
-    val q = EventStreams.runToMemory(EventStreams.hourlyCounts(streamEvents), "hourly_test")
-    q.awaitTermination(120000)
-    q.stop()
-    // sum_value is comparable now that hourlyCounts folds through
-    // DECIMAL (raw double summation order would differ between the
-    // streaming partial-agg and this batch recompute)
-    val streamed = spark.table("hourly_test")
-      .select($"hour", $"event_type", $"cnt", $"sum_value")
-      .collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    val batch = Tables.load(spark, SparkTestSession.sf0001, "events")
-      .groupBy(date_trunc("hour", $"ts").as("hour"), $"event_type")
-      .agg(count(lit(1)).as("cnt"),
-        sum($"value".cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    assert(streamed == batch)
-    assert(streamed.nonEmpty)
+    withTempDir("events-stream") { dir =>
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"${SparkTestSession.sf0001}/events.parquet"),
+        dir.resolve("events.parquet"))
+      val streamEvents = EventStreams.readEventStream(spark, dir.toString)
+      val q = EventStreams.runToMemory(EventStreams.hourlyCounts(streamEvents), "hourly_test")
+      q.awaitTermination(120000)
+      q.stop()
+      // sum_value is comparable now that hourlyCounts folds through
+      // DECIMAL (raw double summation order would differ between the
+      // streaming partial-agg and this batch recompute)
+      val streamed = spark.table("hourly_test")
+        .select($"hour", $"event_type", $"cnt", $"sum_value")
+        .collect()
+        .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+      val batch = Tables.load(spark, SparkTestSession.sf0001, "events")
+        .groupBy(date_trunc("hour", $"ts").as("hour"), $"event_type")
+        .agg(count(lit(1)).as("cnt"),
+          sum($"value".cast("decimal(18,2)")).cast("double").as("sum_value"))
+        .collect()
+        .map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
+      assert(streamed == batch)
+      assert(streamed.nonEmpty)
+    }
   }
 
   test("watermark drops late data in append-mode windowed aggregation") {
@@ -638,12 +640,16 @@ class EventStreamsSpec extends AnyFunSuite {
   /** Lands `df` as ONE parquet file `<name>.parquet` in `src` (an atomic
     * move, so a stream never lists a half-written file). */
   private def land(df: org.apache.spark.sql.DataFrame, src: java.nio.file.Path,
-                   name: String): Unit = {
-    val out = src.resolveSibling(s"staging-$name")
+                   name: String): Unit =
+    java.nio.file.Files.move(stage(df, src.getParent, name), src.resolve(s"$name.parquet"))
+
+  /** Writes `df` as one parquet file under `dir/staging-<name>`; its path. */
+  private def stage(df: org.apache.spark.sql.DataFrame, dir: java.nio.file.Path,
+                    name: String): java.nio.file.Path = {
+    val out = dir.resolve(s"staging-$name")
     df.coalesce(1).write.parquet(out.toString)
-    val part = java.nio.file.Files.list(out).iterator().asScala
+    java.nio.file.Files.list(out).iterator().asScala
       .find(_.getFileName.toString.endsWith(".parquet")).get
-    java.nio.file.Files.move(part, src.resolve(s"$name.parquet"))
   }
 
   /** Janino compiles (generated-class cache misses) while `body` runs. */
@@ -683,29 +689,29 @@ class EventStreamsSpec extends AnyFunSuite {
     val slices = Seq(unix_micros($"ts") <= cut(0),
       unix_micros($"ts") > cut(0) && unix_micros($"ts") <= cut(1),
       unix_micros($"ts") > cut(1))
-    val root = java.nio.file.Files.createTempDirectory("restart_guard")
-    val src = java.nio.file.Files.createDirectories(root.resolve("src"))
-    def restart(i: Int): Map[String, Long] = {
-      land(events.where(slices(i)), src, s"batch$i")
-      Map(
-        "hourlyCounts" -> compiles(runAvailableNow(
-          EventStreams.hourlyCounts(EventStreams.readEventStream(s, src.toString)),
-          "complete", s"$root/ck/hourly")),
-        "sessionizeBounded" -> compiles(runAvailableNow(
-          EventStreams.sessionizeBounded(EventStreams.readEventStream(s, src.toString)
-            .select("event_id", "ts", "user_id", "event_type", "value").as[Event]).toDF(),
-          "append", s"$root/ck/sessions")),
-        // the query-layer reader over its fixed time-split export: each
-        // start is a fresh checkpoint over the same files, so the same
-        // watermarks come back and nothing at all should recompile
-        "splitEventStream" -> compiles(runAvailableNow(
-          EventStreams.sessionizeBounded(
-            graft.queries.StreamingQueries.splitEventStream(sq, SparkTestSession.sf0001)
-              .as[Event]).toDF(),
-          "append", s"$root/ck/split$i")))
+    val runs = withTempDir("restart-guard") { root =>
+      val src = java.nio.file.Files.createDirectories(root.resolve("src"))
+      def restart(i: Int): Map[String, Long] = {
+        land(events.where(slices(i)), src, s"batch$i")
+        Map(
+          "hourlyCounts" -> compiles(runAvailableNow(
+            EventStreams.hourlyCounts(EventStreams.readEventStream(s, src.toString)),
+            "complete", s"$root/ck/hourly")),
+          "sessionizeBounded" -> compiles(runAvailableNow(
+            EventStreams.sessionizeBounded(EventStreams.readEventStream(s, src.toString)
+              .select("event_id", "ts", "user_id", "event_type", "value").as[Event]).toDF(),
+            "append", s"$root/ck/sessions")),
+          // the query-layer reader over its fixed time-split export: each
+          // start is a fresh checkpoint over the same files, so the same
+          // watermarks come back and nothing at all should recompile
+          "splitEventStream" -> compiles(runAvailableNow(
+            EventStreams.sessionizeBounded(
+              graft.queries.StreamingQueries.splitEventStream(sq, SparkTestSession.sf0001)
+                .as[Event]).toDF(),
+            "append", s"$root/ck/split$i")))
+      }
+      (0 until 3).map(restart)
     }
-    val runs = try (0 until 3).map(restart)
-      finally org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
     info(s"janino compiles per restart: ${runs.mkString(" | ")}")
     // what a restart may compile: only code that really changed. The
     // sessionization's late-event filter is a SpecificPredicate that
@@ -717,5 +723,71 @@ class EventStreamsSpec extends AnyFunSuite {
     val third = runs(2)
     assert(allowed.forall { case (k, n) => third(k) <= n },
       s"third restart recompiled $third; allowed $allowed")
+  }
+
+  /** Each process started from Hadoop's `Shell` while `body` runs, as
+    * "command <- callers", recorded in-process by JFR. */
+  private def shellForks(dir: java.nio.file.Path)(body: => Unit): Seq[String] = {
+    val rec = new jdk.jfr.Recording()
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      try body finally rec.stop()
+      val file = dir.resolve(s"forks-${System.nanoTime}.jfr")
+      rec.dump(file)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(file).asScala.toSeq.flatMap { e =>
+        val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+          .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+        if (!frames.exists(_.startsWith("org.apache.hadoop.util.Shell"))) None
+        else Some(s"${e.getString("command")} <- " +
+          frames.filterNot(f => f.startsWith("java.") || f.contains(".Shell")).take(6).mkString(" < "))
+      }
+    } finally rec.close()
+  }
+
+  test("checkpointed stream restarts fork no shell process") {
+    import EventStreams.Event
+    val s = spark.newSession()
+    import s.implicits._
+    withTempDir("fork-guard") { root =>
+      // the recorder sees a checkpoint write through Spark's default
+      // manager fork, so an empty count below is not a blind recorder
+      val default = new org.apache.spark.sql.execution.streaming.checkpointing
+        .FileContextBasedCheckpointFileManager(new org.apache.hadoop.fs.Path(root.toUri),
+          s.sessionState.newHadoopConf())
+      val control = shellForks(root)(
+        default.createAtomic(new org.apache.hadoop.fs.Path(s"$root/probe"), true).close())
+      assert(control.nonEmpty, "JFR recorded no fork from the default manager's write")
+
+      // three time-ordered slices, written before recording (a parquet
+      // write forks chmod, which is not what this guards) and each landed
+      // by a move before its restart
+      val events = Tables.load(s, SparkTestSession.sf0001, "events")
+        .select("event_id", "ts", "user_id", "event_type", "value")
+      val Array(lo, hi) = events.agg(min(unix_micros($"ts")), max(unix_micros($"ts")))
+        .head().toSeq.map(_.asInstanceOf[Long]).toArray
+      val cut = (1 to 2).map(i => lo + (hi - lo) * i / 3)
+      val staged = Seq(unix_micros($"ts") <= cut(0),
+        unix_micros($"ts") > cut(0) && unix_micros($"ts") <= cut(1),
+        unix_micros($"ts") > cut(1)).zipWithIndex.map { case (slice, i) =>
+        stage(events.where(slice), root, s"batch$i")
+      }
+      val src = java.nio.file.Files.createDirectories(root.resolve("src"))
+      val forks = shellForks(root) {
+        staged.zipWithIndex.foreach { case (file, i) =>
+          java.nio.file.Files.move(file, src.resolve(s"batch$i.parquet"))
+          runAvailableNow(
+            EventStreams.hourlyCounts(EventStreams.readEventStream(s, src.toString)),
+            "complete", s"$root/ck/hourly")
+          runAvailableNow(
+            EventStreams.sessionizeBounded(EventStreams.readEventStream(s, src.toString)
+              .select("event_id", "ts", "user_id", "event_type", "value").as[Event]).toDF(),
+            "append", s"$root/ck/sessions")
+        }
+      }
+      info(s"shell forks: default-manager write ${control.size}, three restarts ${forks.size}")
+      // a count, so a failure prints the first callers, not every fork
+      assert(forks.size == 0, s"shell forks:\n${forks.distinct.take(10).mkString("\n")}")
+    }
   }
 }
