@@ -6,21 +6,16 @@ import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
 /**
- * SCALING.md probe for the centroid-TABLE serving tier (round 13 —
- * the r12 verdict's items 1 and 2 measured):
- *
- *  - `eval` mode: the s80 leave-one-out 1-NN label eval run THROUGH
- *    the table tier at an occupancy-held nlist PAST the literal cap
- *    (ivfListsFor with a caller maxBits — e.g. 10 → 1024 lists at
- *    sf10). This is the cell the r12 SCALING table recorded as
- *    "infeasible BY THE CAP" (32 lists at sf10 → 15 625 vectors/list
- *    → ~3·10¹⁰ candidates): the table tier holds occupancy instead,
- *    keeping the probed fraction nprobe/nlist constant.
+ * SCALING.md probe for IVF serving and evaluation at corpus scale
+ * (rounds 13-16). Its `eval` and `evalexpr` modes A/B'd a broadcast
+ * centroid-table encoding of IVF assignment and probing against the
+ * fused expression kernels; that encoding is gone, and SCALING.md keeps
+ * the numbers they recorded.
  *
  *  - `serve` mode: the s78 pruned-vs-full per-batch read at a
- *    PRODUCTION-SIZED nlist. Builds a table-assigned on-disk index
+ *    PRODUCTION-SIZED nlist. Builds an assigned on-disk index
  *    (partitionBy __cid), then serves the s78 request pattern (5
- *    batches × 3 queries, nprobe 4) twice per run: PRUNED (driver
+ *    batches × 3 queries, nprobe 4) per variant: PRUNED (driver
  *    probe selection → static `__cid IN` on the scan — reads ≤ 12 of
  *    nlist lists per batch) vs FULL (the s77 topology — every batch
  *    scans the whole index; the probe join still discards unprobed
@@ -31,16 +26,6 @@ import graft.operators.Similarity
  *
  * Probe-only artifacts land under /tmp (never under the digest-chained
  * data/ exports the declared queries serve from).
- *
- *  - `evalexpr` mode (round 13, third tier): a SAME-SESSION A/B of the
- *    occupancy-held leave-one-out eval through the table tier vs the
- *    scan-local EXPRESSION tier (kmeansCentroidsByExpr /
- *    ivfTopKByExpr) — same nlist, same shuffled query side, the two
- *    trainers bit-equal (IvfExprTierSpec), so the pair isolates what
- *    the tier itself costs: the table tier pays a ×nlist row
- *    expansion through an aggregation plus an assignment join-back;
- *    the expr tier fuses both into the scan projection. Eval runs
- *    alternate table/expr so neither tier owns the warm-up.
  *
  *  - `evalhier` mode (round 13, fourth tier): a SAME-SESSION A/B of the
  *    flat expression tier vs the HIERARCHICAL two-level tier at the
@@ -55,16 +40,16 @@ import graft.operators.Similarity
  *    honest recall price next to the honest saving.
  *
  * Usage:
- *   runMain graft.IvfTableProbe eval     <sfDir> [maxBits] [runs]
- *   runMain graft.IvfTableProbe evalexpr <sfDir> [maxBits] [runs]
+ *   runMain graft.IvfTableProbe labeleval <sfDir> [maxBits] [runs]
  *   runMain graft.IvfTableProbe evalhier <sfDir> [nlist]   [runs]   (nlist 0 -> sqrt-law)
  *   runMain graft.IvfTableProbe serve    <sfDir> [nlist]   [runs]
  *   runMain graft.IvfTableProbe recall   <sfDir> [nlist]            (nlist 0 -> sqrt-law)
+ *   runMain graft.IvfTableProbe rollover <sfDir>
  * Env (as Profile): SPARK_GRAFT_CPUS, SPARK_GRAFT_PARTITIONS.
  */
 object IvfTableProbe {
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: runMain graft.IvfTableProbe <eval|serve> <sfDir> [param] [runs]")
+    require(args.length >= 2, "usage: runMain graft.IvfTableProbe <mode> <sfDir> [param] [runs]")
     val mode = args(0)
     val sfDir = args(1)
     val runs = args.lift(3).map(_.toInt).getOrElse(2)
@@ -77,55 +62,25 @@ object IvfTableProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // the table tier's argmax/probe aggregations are TypedImperative
-      // (TopKAgg) over ~n/tasks distinct keys per task; the default
+      // the rankAgg evals' TopKAgg buffers are TypedImperative over
+      // ~n/tasks distinct query ids per task; the default
       // ObjectHashAggregate fallback (128 keys/task) would sort-spill
-      // the ×nlist expansion instead of streaming it through the
-      // bounded buffers — raise it as a production index build would
+      // the candidate stream instead of streaming it through the
+      // bounded buffers — raise it as a production eval would
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 21).toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     mode match {
-      case "eval"     => evalMode(spark, emb, args.lift(2).map(_.toInt).getOrElse(10), runs)
       case "labeleval" => labelEvalMode(spark, emb, args.lift(2).map(_.toInt).getOrElse(10), runs)
-      case "evalexpr" => evalExprMode(spark, emb, args.lift(2).map(_.toInt).getOrElse(10), runs)
       case "evalhier" => evalHierMode(spark, emb, args.lift(2).map(_.toInt).getOrElse(0), runs)
       case "serve"    => serveMode(spark, emb, args.lift(2).map(_.toInt).getOrElse(128), runs)
       case "recall"   => recallMode(spark, emb, args.lift(2).map(_.toInt).getOrElse(0))
       case "rollover" => rolloverMode(spark, sfDir)
-      case other      => sys.error(s"unknown mode '$other' (eval|labeleval|evalexpr|evalhier|serve|recall|rollover)")
+      case other      => sys.error(s"unknown mode '$other' (labeleval|evalhier|serve|recall|rollover)")
     }
     spark.stop()
-  }
-
-  /** s80 through the table tier at occupancy-held nlist (uncapped to
-    * `maxBits`): train, then leave-one-out 1-NN label agreement with
-    * the corpus-sized query side SHUFFLED (never broadcast — the s80
-    * discipline). Prints train/eval seconds and the overall agreement
-    * so the number is a real eval, not an empty loop. */
-  private def evalMode(spark: SparkSession, embRaw: DataFrame, maxBits: Int, runs: Int): Unit = {
-    val emb = embRaw.select(col("vec_id"), col("embedding"), col("label"))
-    emb.persist(); val n = emb.count()
-    val nlist = Similarity.ivfListsFor(n, targetOccupancy = 16, minBits = 4, maxBits = maxBits)
-    println(s"[tableprobe] eval corpus n=$n occupancy-held nlist=$nlist (maxBits=$maxBits) nprobe=4")
-    val t0 = System.nanoTime()
-    val cents = Similarity.kmeansCentroidsByTable(emb, nlist = nlist, iters = 2)
-    val trainSec = (System.nanoTime() - t0) / 1e9
-    val cdf = Similarity.centroidsDf(spark, cents)
-    var best = Double.MaxValue
-    var agree = (-1L, -1L)
-    (1 to runs).foreach { _ =>
-      val t1 = System.nanoTime()
-      agree = runLabelEval(spark, emb,
-        Similarity.ivfTopKByTable(cdf, emb, emb, k = 1, broadcastQueries = false,
-          rankAgg = true))
-      best = math.min(best, (System.nanoTime() - t1) / 1e9)
-    }
-    println(f"[tableprobe] eval nlist=$nlist train=$trainSec%.1f s eval(min)=$best%.1f s " +
-      f"agree=${agree._2}/${agree._1} (${agree._2.toDouble / agree._1}%.3f)" + " [" + HostLoad.line + "]")
-    emb.unpersist()
   }
 
   /** The leave-one-out 1-NN label eval with the PER-CLASS breakdown
@@ -194,44 +149,6 @@ object IvfTableProbe {
     // the served row counts, so the stage seconds have denominators
     for (g <- Seq("index", "gen2/index", "gen3/index"))
       println(s"[tableprobe] rollover rows $g=${spark.read.parquet(s"$root/$g").count()}")
-  }
-
-  /** Same-session table-vs-expr A/B at the same occupancy-held nlist:
-    * the trainers are bit-equal (spec-pinned), so train times are the
-    * honest tier difference and both evals serve ONE quantizer. */
-  private def evalExprMode(spark: SparkSession, embRaw: DataFrame, maxBits: Int, runs: Int): Unit = {
-    val emb = embRaw.select(col("vec_id"), col("embedding"), col("label"))
-    emb.persist(); val n = emb.count()
-    val nlist = Similarity.ivfListsFor(n, targetOccupancy = 16, minBits = 4, maxBits = maxBits)
-    println(s"[tableprobe] evalexpr corpus n=$n occupancy-held nlist=$nlist (maxBits=$maxBits) nprobe=4")
-    val t0 = System.nanoTime()
-    val centsT = Similarity.kmeansCentroidsByTable(emb, nlist = nlist, iters = 2)
-    val trainTable = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val cents = Similarity.kmeansCentroidsByExpr(emb, nlist = nlist, iters = 2)
-    val trainExpr = (System.nanoTime() - t1) / 1e9
-    require(cents.zip(centsT).forall { case (a, b) => a.sameElements(b) },
-      "trainers diverged — the A/B premise (one quantizer) is broken")
-    println(f"[tableprobe] evalexpr train table=$trainTable%.1f s expr=$trainExpr%.1f s (bit-equal)" + " [" + HostLoad.line + "]")
-    val cdf = Similarity.centroidsDf(spark, cents)
-    var bestT = Double.MaxValue; var bestE = Double.MaxValue
-    var agreeT = (-1L, -1L); var agreeE = (-1L, -1L)
-    (1 to runs).foreach { _ =>
-      val t2 = System.nanoTime()
-      agreeT = runLabelEval(spark, emb,
-        Similarity.ivfTopKByTable(cdf, emb, emb, k = 1, broadcastQueries = false,
-          rankAgg = true))
-      bestT = math.min(bestT, (System.nanoTime() - t2) / 1e9)
-      val t3 = System.nanoTime()
-      agreeE = runLabelEval(spark, emb,
-        Similarity.ivfTopKByExpr(cents, emb, emb, k = 1, broadcastQueries = false,
-          rankAgg = true))
-      bestE = math.min(bestE, (System.nanoTime() - t3) / 1e9)
-    }
-    require(agreeT == agreeE, s"tiers disagreed: table=$agreeT expr=$agreeE")
-    println(f"[tableprobe] evalexpr nlist=$nlist eval(min) table=$bestT%.1f s expr=$bestE%.1f s " +
-      f"agree=${agreeT._2}/${agreeT._1} (${agreeT._2.toDouble / agreeT._1}%.3f)" + " [" + HostLoad.line + "]")
-    emb.unpersist()
   }
 
   /** Flat-expr vs hierarchical A/B at one nlist (0 → the √-law
@@ -396,7 +313,7 @@ object IvfTableProbe {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** The s78 request pattern against a table-assigned on-disk index at
+  /** The s78 request pattern against an assigned on-disk index at
     * `nlist` lists: per-batch pruned (static IN) vs full (whole-index
     * scan) serving, summed over the 5 batches, min across runs. */
   private def serveMode(spark: SparkSession, embRaw: DataFrame, nlist: Int, runs: Int): Unit = {
@@ -404,16 +321,15 @@ object IvfTableProbe {
     emb.persist(); val n = emb.count()
     println(s"[tableprobe] serve corpus n=$n nlist=$nlist nprobe=4 batches=5x3")
     val t0 = System.nanoTime()
-    val cents = Similarity.kmeansCentroidsByTable(emb, nlist = nlist, iters = 2)
+    val cents = Similarity.kmeansCentroidsByExpr(emb, nlist = nlist, iters = 2)
     val trainSec = (System.nanoTime() - t0) / 1e9
-    val cdf = Similarity.centroidsDf(spark, cents)
     val idx = s"/tmp/graft-tableprobe-ivf-n$nlist"
     val t1 = System.nanoTime()
     // repartition on the list id first: one file per inverted list
     // instead of (tasks × nlist) shards — the layout a real index
     // build targets, and what keeps file-open cost out of the serve
     // numbers
-    Similarity.ivfAssignedByTable(cdf, emb)
+    Similarity.ivfAssignedByExpr(cents, emb)
       .repartition(col("__cid"))
       .write.mode("overwrite").partitionBy("__cid").parquet(idx)
     val buildSec = (System.nanoTime() - t1) / 1e9
@@ -458,7 +374,7 @@ object IvfTableProbe {
                 cids.size.toDouble / nlist)
             } else (scan, 1.0)
           fracSum += frac
-          Similarity.ivfTopKOnIndexByTable(cdf, pruned, qdf, k = 10).collect()
+          Similarity.ivfTopKOnIndexByExpr(cents, pruned, qdf, k = 10).collect()
         }
         readFrac = fracSum / 5
         best = math.min(best, (System.nanoTime() - t2) / 1e9)

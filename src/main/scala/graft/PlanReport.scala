@@ -78,7 +78,7 @@ object PlanReport {
     "p17_dpp_join" ->
       "dynamic partition pruning: the fact scan's PartitionFilters carry a dynamicpruningexpression fed by the runtime-filtered dim — whole status directories are skipped per the dim's actual content",
     "d53_kmeans_clusters" ->
-      "k-means cluster report: all 16 centroid scores evaluate as literals inside the scan projection (no join against a centroid table); the only exchange is the 16-group aggregation",
+      "k-means cluster report: the fused CentroidArgmax picks each row's cluster inside the scan projection (the 16x64 matrix one plan Literal, no join against a centroid table) and the member cosine is one vec_dot against that centroid; the only exchange is the 16-group aggregation",
     "s56_retrieval_join" ->
       "retrieval join: the queries×k hit set is BROADCAST into the documents probe (BuildRight) — the corpus streams once with a pruned 4-column read schema, no corpus shuffle",
     "a73_latest_per_key" ->
@@ -146,11 +146,11 @@ object PlanReport {
     "s80_knn_label_eval_ivf" ->
       "embedding-quality eval, production form: leave-one-out 1-NN label agreement where EVERY vector is a query — the probed fraction nprobe/nlist dominates, so the quantizer is occupancy-held (ivfListsFor; the fixed-16 serving quantizer measurably LOSES to brute here at sf1, 58 vs 44 s, while the held one wins 32 vs 56 s); candidates are a list-bucketed equi-join (never all-pairs), top-1 by (sim DESC, nbr_id) through the BOUNDED TopKAgg buffers (rankAgg — no Window: the window form sorts the whole candidate stream, which at n=2M is ~8e9 rows and spilled past the disk; the buffers carry <=k rows per query per partition), and the labels-sized report folds map-side; the exact twin s79 is the recall-1 ground truth, ranked by the fused broadcast-query kernel (FusedTopK: one corpus scan scores every row against the broadcast query matrix into <=k primitive buffers per query, the driver merges the task partials — no pair rows, no join, no shuffle, so its visible plan is the local top-1 table joined to the labels); the oracle re-derives the probe path from spliced centroids",
     "s81_ann_ivf_table" ->
-      "the centroid-TABLE serving tier (the r12 cap lift): probe assignment joins a BROADCAST centroid table and keeps each query's nprobe best through bounded TopKAgg buffers (ObjectHashAggregate — no window sort, no per-centroid literal structs anywhere in the plan: the literal tier's array_sort signature is spec-asserted ABSENT); corpus assignment is the same broadcast join projected to SKINNY (id, score, cid) rows before a k=1 TopKAgg argmax + id join-back — the x-nlist expansion never carries a vector through an aggregation (the payload-carrying max(struct) form is complex-typed and falls back to a SORT over the expansion: measured 160 GB of spill at n=200k x nlist=1024 where the skinny form streams); nlist=128 here, 4x past the literal cap, same spliced-centroid oracle as s37",
+      "IVF serving at nlist=128 (4x past ivfListsFor's default cap): corpus assignment (CentroidArgmax) and per-query probe selection (CentroidProbes -> explode of a <=nprobe array) are fused loops in the scan projections with the matrix one plan Literal — no per-centroid structs, no centroid-table join, no row expansion; the only exchange is the list-id candidate equi-join; same spliced-centroid oracle as s37 (the key keeps its historical _table suffix)",
     "s82_knn_label_eval_table" ->
-      "the leave-one-out eval through the centroid-TABLE tier at nlist=128: every vector is a query, so probe selection is the skinny TopKAgg aggregation (no scan-stage centroid literals — at 128 lists a literal projection would be 4x past the codegen cap) and the candidate join buckets by list id with the query side SHUFFLED, never broadcast (the s80 discipline); probed fraction 4/128, a 4x cut over s80's capped 32 lists — the tier's payoff in the shape where the probed fraction IS the cost; same spliced-centroid oracle recompute, so the reported accuracies are the 128-list probe's true numbers",
+      "the leave-one-out eval at nlist=128: every vector is a query, probe selection is the fused CentroidProbes loop in the query scan (no row expansion for the corpus-sized query side) and the candidate join buckets by list id with the query side SHUFFLED, never broadcast (the s80 discipline); probed fraction 4/128, a 4x cut over s80's capped 32 lists; same spliced-centroid oracle recompute, so the reported accuracies are the 128-list probe's true numbers",
     "s83_ann_ivf_expr" ->
-      "the scan-local EXPRESSION tier (third tier, r13): the whole 256-list centroid matrix rides the plan as ONE Literal (the PQ-codebook pattern) and enters generated code as a reference object, so corpus assignment (CentroidArgmax) and per-query probe selection (CentroidProbes -> explode of a <=nprobe array) are fused while-loops INSIDE the scan projection — no per-centroid literal structs (array_sort absent, spec-pinned), no x-nlist row expansion, no TopKAgg probe aggregation, no assignment join-back; the only remaining exchange is the list-id candidate equi-join itself; answers bit-identical to both other tiers (IvfExprTierSpec), same spliced-centroid oracle; same-session sf10 A/B: 3.5x over the table tier on training, 1.9x on the corpus-sized eval",
+      "IVF serving at nlist=256: the whole centroid matrix rides the plan as ONE Literal (the PQ-codebook pattern) and enters generated code as a reference object, so corpus assignment (CentroidArgmax) and per-query probe selection (CentroidProbes -> explode of a <=nprobe array) are fused while-loops INSIDE the scan projection — no per-centroid structs (array_sort absent, spec-pinned), no x-nlist row expansion, no join-back; the only remaining exchange is the list-id candidate equi-join itself; same spliced-centroid oracle; same-session sf10 A/B against the retired centroid-table encoding: 3.5x on training, 1.9x on the corpus-sized eval",
     "d81_mixture_resample_weighted" ->
       "weighted-target mixture (DoReMi/Pile-style shares): identical broadcast-weights plan shape as d76 — one scan-local token count, a strata-sized aggregate with the share CASE chain, thresholds broadcast back, scan-side CRC membership; the corpus crosses no exchange for the join (BroadcastHashJoin pinned with d76/d77 in PlanChecksSpec), and the shared resample tail means the one-slot floor and null-stratum discipline are the same code path as the equal-share family",
     "d80_curation_funnel" ->
@@ -164,7 +164,7 @@ object PlanReport {
     "s85_ann_ivf_hier" ->
       "the HIERARCHICAL two-level tier (fourth tier, r13): BOTH matrices (coarse + fine) ride the plan as Literals and assignment/probe selection are fused two-level while-loops inside the scan projection (HierArgmax / HierProbes -> explode of a <=nprobe array) — per row ncoarse + cprobe*(nlist/ncoarse) cosines instead of nlist, the sqrt-law cut of the quantizer-scan term that dominates past ~10^10 vectors; no per-centroid structs (array_sort absent), no row expansion, no join-back, and the only exchange is the same list-id candidate equi-join as s83; the fine->coarse ownership map is DERIVED (argmax, ties->low kid) so the oracle re-derives it from the spliced VALUES and walks the whole two-level path — empty coarse cells never probed (spec-pinned), answers identical to the flat tier at cprobe=ncoarse (spec-pinned)",
     "s90_ann_ivf_prod" ->
-      "PRODUCTION-NLIST persisted serving (r14): a 128-list expression-tier index read back from its hive-partitioned layout — probe selection is the fused CentroidProbes loop in the query scan's projection (the whole matrix one plan Literal, no per-centroid structs), and the broadcast probe join on the partition column injects dynamicpruningexpression on the index scan (the s60 mechanism, 8x past the literal cap): the session reads ~nprobe/nlist of the index directories and retrains nothing; the coarse matrix persists beside the fine one, so the same artifact also serves s91 (hier query walk) and s92 (pruned streaming topology, per-batch static-InSet pins in PlanChecksSpec)",
+      "PRODUCTION-NLIST persisted serving (r14): a 128-list expression-tier index read back from its hive-partitioned layout — probe selection is the fused CentroidProbes loop in the query scan's projection (the whole matrix one plan Literal, no per-centroid structs), and the broadcast probe join on the partition column injects dynamicpruningexpression on the index scan (the s60 mechanism, 8x past ivfListsFor's default cap): the session reads ~nprobe/nlist of the index directories and retrains nothing; the coarse matrix persists beside the fine one, so the same artifact also serves s91 (hier query walk) and s92 (pruned streaming topology, per-batch static-InSet pins in PlanChecksSpec)",
     "s91_ann_ivf_prod_hier" ->
       "the persisted production index behind the HIERARCHICAL query walk: assignment stays the build-time exact argmax (the index partitions ARE the assignment), queries run the fused two-level loop (HierProbes — ncoarse + cprobe*(nlist/ncoarse) cosines instead of nlist); the oracle re-derives the HYBRID path (flat assign + two-level probes) from the two spliced matrices — the best-quality production config: the build pays the flat scan once, every query pays the sqrt-law loop",
     "s93_ann_recall_held" ->
@@ -203,7 +203,7 @@ object PlanReport {
     * (query, sink, note). */
   val streamingSections: Seq[(String, String, String)] = Seq(
     ("s77_stream_ann_serving", "s77_sink",
-      "online ANN serving: query vectors arrive as a STREAM, the persisted IVF index is the static side — per batch, queries probe-assign via the centroid expressions (scan-stage literals), stream-static hash join on the list id, and the bounded TopKAgg keeps k rows of aggregation state per query (never the candidate stream); the oracle is the batch probe/rank recompute — streaming must not change the answer. NOTE: this topology rescans the WHOLE index per micro-batch (no cid pushdown from a stream side); s78 is the pruned production shape — its per-batch plans exist only inside foreachBatch, so the evidence is the programmatic pin (PlanChecksSpec s78: every batch's index scan carries a static __cid InSet equal to the driver-selected probe union, <= batch*nprobe of nlist)"),
+      "online ANN serving: query vectors arrive as a STREAM, the persisted IVF index is the static side — per batch, queries probe-assign via the fused CentroidProbes expression in the stream's scan projection, stream-static hash join on the list id, and the bounded TopKAgg keeps k rows of aggregation state per query (never the candidate stream); the oracle is the batch probe/rank recompute — streaming must not change the answer. NOTE: this topology rescans the WHOLE index per micro-batch (no cid pushdown from a stream side); s78 is the pruned production shape — its per-batch plans exist only inside foreachBatch, so the evidence is the programmatic pin (PlanChecksSpec s78: every batch's index scan carries a static __cid InSet equal to the driver-selected probe union, <= batch*nprobe of nlist)"),
     ("s68_stream_transitions", "s68_sink",
       "transformWithState delta transition counting: TransformWithStateExec over the RocksDB provider; per-user last-event ValueState bridges micro-batches, each batch emits delta counts"),
     ("s69_stream_semi_join", "s69_sink",

@@ -8,25 +8,21 @@ import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /**
- * Scan-local IVF coarse-quantizer kernels — the THIRD serving tier
- * (round 13), past both the per-centroid-literal-struct tier (one
- * expression node per centroid → bounded at ~32 lists by codegen'd
- * projection size) and the broadcast-table tier (free nlist, but the
- * ×nlist row expansion streams through an aggregation and assignment
- * pays a join-back). Here the WHOLE centroid matrix rides the plan as
- * ONE `Literal` node (the [[PqOps]] codebook pattern), is parsed once
- * at plan time, and enters generated code as a reference object — so
- * assignment and probe selection are single fused loops inside the
- * scan projection: no row expansion, no aggregation, no join-back, at
- * ANY nlist an executor can hold (nlist × dim doubles — 33 MB at
- * 65 536 × 64, shipped once per stage with the serialized plan, the
- * same volume the table tier broadcasts).
+ * Scan-local IVF coarse-quantizer kernels — the one implementation of
+ * IVF assignment and probe selection. The WHOLE centroid matrix rides
+ * the plan as ONE `Literal` node (the [[PqOps]] codebook pattern), is
+ * parsed once at plan time, and enters generated code as a reference
+ * object — so assignment and probe selection are single fused loops
+ * inside the scan projection: no row expansion, no aggregation, no
+ * join-back, at ANY nlist an executor can hold (nlist × dim doubles —
+ * 33 MB at 65 536 × 64, shipped once per stage with the serialized
+ * plan). Plans print the matrix as its shape and a content digest
+ * ([[IvfOps.matrixLabel]]), never its values.
  *
- * Arithmetic is BIT-IDENTICAL to the literal tier (and therefore to
- * every spliced-centroid DuckDB oracle): cosine = dot/(√sv·√sc) with
- * all three sums left-folded from 0.0 in one pass, 0 when the norm
- * product is 0; argmax ties → LOWEST cid (the struct-argmax rule);
- * probe ties → HIGHEST cid (the reverse-array-sort rule). NaN inputs
+ * Arithmetic is BIT-IDENTICAL to every spliced-centroid DuckDB oracle:
+ * cosine = dot/(√sv·√sc) with all three sums left-folded from 0.0 in
+ * one pass, 0 when the norm product is 0; argmax ties → LOWEST cid;
+ * probe ties → HIGHEST cid (`ORDER BY s DESC, cid DESC`). NaN inputs
  * are impossible for finite parquet floats and finite centroids —
  * documented, not handled, as the PQ kernels.
  */
@@ -47,7 +43,8 @@ object IvfOps {
 
   /** Cosine of the row vector against one centroid — the one fused
     * pass whose three accumulators fold in exactly the order the
-    * literal tier's vec_dot/norm composition folds them. */
+    * `vec_dot`/norm composition ([[graft.operators.Similarity.cosine]])
+    * folds them. */
   def cosTo(v: ArrayData, vIsFloat: Boolean, c: Array[Double]): Double = {
     val n = c.length
     if (v.numElements() != n)
@@ -109,6 +106,13 @@ object IvfOps {
     }
     new GenericArrayData(cc.take(filled).map(Integer.valueOf))
   }
+
+  /** A centroid-matrix literal as plans print it ([[PqOps.literalLabel]]). */
+  def matrixLabel(name: String, parsed: => Array[Array[Double]], e: Expression): String =
+    PqOps.literalLabel(name, e) {
+      val m = parsed
+      (Seq(m.length, m(0).length), m.asInstanceOf[Array[AnyRef]])
+    }
 
   // ------------------------- hierarchical (two-level) quantizer kernels
 
@@ -253,6 +257,9 @@ case class CentroidArgmax(left: Expression, right: Expression) extends BinaryExp
     defineCodeGen(ctx, ev, (v, _) => s"graft.functions.IvfOps.argmaxCid($v, $vIsFloat, $ref)")
   }
 
+  override def toString: String =
+    s"$prettyName($left, ${IvfOps.matrixLabel("cents", cents, right)})"
+
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CentroidArgmax =
     copy(left = newLeft, right = newRight)
 }
@@ -281,6 +288,9 @@ case class CentroidProbes(first: Expression, second: Expression, third: Expressi
     defineCodeGen(ctx, ev, (v, _, _) =>
       s"graft.functions.IvfOps.probeCids($v, $vIsFloat, $ref, $nprobe)")
   }
+
+  override def toString: String =
+    s"$prettyName($first, ${IvfOps.matrixLabel("cents", cents, second)}, $third)"
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): CentroidProbes =
     copy(first = f, second = s, third = t)
@@ -342,6 +352,10 @@ case class HierArgmax(first: Expression, second: Expression,
       s"graft.functions.IvfOps.hierArgmaxCid($v, $vIsFloat, $co, $fi, $ce, $ow, $cprobe)")
   }
 
+  override def toString: String =
+    s"$prettyName($first, ${IvfOps.matrixLabel("coarse", coarse, second)}, " +
+      s"${IvfOps.matrixLabel("fine", fine, third)}, $fourth)"
+
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression, q: Expression): HierArgmax =
     copy(first = f, second = s, third = t, fourth = q)
@@ -383,6 +397,10 @@ case class HierProbes(first: Expression, second: Expression, third: Expression,
     defineCodeGen(ctx, ev, (v, _, _, _, _) =>
       s"graft.functions.IvfOps.hierProbeCids($v, $vIsFloat, $co, $fi, $ce, $ow, $cprobe, $nprobe)")
   }
+
+  override def toString: String =
+    s"$prettyName($first, ${IvfOps.matrixLabel("coarse", coarse, second)}, " +
+      s"${IvfOps.matrixLabel("fine", fine, third)}, $fourth, $fifth)"
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): HierProbes =

@@ -180,6 +180,22 @@ object PqOps {
     books
   }
 
+  /** A matrix or codebook literal as plans print it:
+    * `name[d1xd2… #digest]`, the digest a 32-bit hash over every
+    * double's bits in 8 hex digits — enough to tell two trained models
+    * apart in a plan diff without inlining their values. A child that
+    * does not parse prints as is. */
+  def literalLabel(name: String, e: Expression)(parsed: => (Seq[Int], Array[AnyRef])): String =
+    scala.util.Try(parsed).toOption.fold(e.toString) { case (shape, m) =>
+      f"$name[${shape.mkString("x")} #${java.util.Arrays.deepHashCode(m)}%08x]"
+    }
+
+  def booksLabel(books: => Array[Array[Array[Double]]], e: Expression): String =
+    literalLabel("books", e) {
+      val b = books
+      (Seq(b.length, b(0).length, b(0)(0).length), b.asInstanceOf[Array[AnyRef]])
+    }
+
   def isFloatVec(e: Expression, fn: String): Boolean = e.dataType match {
     case ArrayType(FloatType, _) => true
     case ArrayType(DoubleType, _) => false
@@ -204,6 +220,8 @@ case class PqEncode(left: Expression, right: Expression) extends BinaryExpressio
     defineCodeGen(ctx, ev, (v, _) => s"graft.functions.PqOps.encode($v, $vIsFloat, $ref)")
   }
 
+  override def toString: String = s"$prettyName($left, ${PqOps.booksLabel(books, right)})"
+
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): PqEncode =
     copy(left = newLeft, right = newRight)
 }
@@ -225,6 +243,8 @@ case class PqAdc(first: Expression, second: Expression, third: Expression)
     val ref = ctx.addReferenceObj("pqBooks", books, "double[][][]")
     defineCodeGen(ctx, ev, (q, c, _) => s"graft.functions.PqOps.adc($q, $qIsFloat, $c, $ref)")
   }
+
+  override def toString: String = s"$prettyName($first, $second, ${PqOps.booksLabel(books, third)})"
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): PqAdc =
     copy(first = f, second = s, third = t)

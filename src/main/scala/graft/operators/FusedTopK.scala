@@ -66,7 +66,7 @@ private[graft] object FusedTopK {
     run(scan, rows, None, k, queries.schema(idCol).dataType)
   }
 
-  /** `assigned` is the [[Similarity.ivfAssigned]] shape (nbr_id, cvec,
+  /** `assigned` is the [[Similarity.ivfAssignedByExpr]] shape (nbr_id, cvec,
     * cn, __cid). `pruneLists` filters it to the probed lists — a static
     * partition filter on an on-disk `partitionBy(__cid)` index, where
     * the candidate stream relied on dynamic partition pruning. */
@@ -75,7 +75,7 @@ private[graft] object FusedTopK {
           pruneLists: Boolean): DataFrame = {
     Similarity.requireLongNbr(assigned.schema("nbr_id").dataType)
     val rows = queries.select(col(idCol), col(vecCol),
-      CentroidFunctions.centroid_probes(col(vecCol), cents, nprobe)).collect()
+      CentroidFunctions.centroid_probes(col(vecCol), cents, nprobe).as("__probes")).collect()
     val probed = rows.filterNot(_.isNullAt(2)).flatMap(_.getSeq[Int](2)).distinct
     val lists = if (pruneLists) assigned.where(col("__cid").isin(probed.toIndexedSeq: _*))
       else assigned

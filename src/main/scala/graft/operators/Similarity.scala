@@ -151,16 +151,13 @@ object Similarity {
    * so a corpus smaller than the floor still trains one centroid per
    * vector at most. Holding per-list occupancy keeps a query's probe
    * cost (~nprobe/nlist of the corpus) constant as the corpus grows.
-   * The maxBits cap is an ENGINEERING bound of the LITERAL serving
-   * path only, not of the math: there centroids ride into the
-   * probe/assignment expressions as literals, so nlist is bounded by
-   * what a single codegen'd projection comfortably holds (32 × 64
-   * doubles at the default cap). The centroid-TABLE tier
-   * ([[ivfTopKByTable]] / [[kmeansCentroidsByTable]]) removes the
-   * bound — probe assignment joins a broadcast centroid table, so a
-   * caller on that tier passes a larger maxBits here freely (the index
-   * layout and the oracle splice were always size-agnostic; s81 serves
-   * 128 lists, the probes measured through 1024+).
+   * The default maxBits cap is not a bound of the kernel — the fused
+   * argmax/probe expressions take any nlist an executor holds, and a
+   * caller passes a larger maxBits freely (the index layout and the
+   * oracle splice are size-agnostic; s81 serves 128 lists, the probes
+   * measured through 1024+). It stays because the declared gate-nlist
+   * queries (s80, the curated index) were built and oracle-checked at
+   * it.
    */
   def ivfListsFor(n: Long, targetOccupancy: Int = 16,
                   minBits: Int = 4, maxBits: Int = 5): Int =
@@ -404,32 +401,55 @@ object Similarity {
     if (verifyThenDistinct) verified.dropDuplicates("i", "j") else verified
   }
 
+  // ------------------------------------------ IVF (flat coarse quantizer)
+  //
+  // One kernel per semantics: assignment is argmax cosine with ties →
+  // the LOWEST cid ([[graft.functions.CentroidArgmax]]), probe selection
+  // is the top-nprobe by cosine with ties → the HIGHER cid
+  // ([[graft.functions.CentroidProbes]]). The whole centroid matrix
+  // rides the plan as ONE Literal and both are fused loops inside the
+  // scan projection — no ×nlist row expansion, no aggregation, no
+  // join-back, at any nlist an executor holds (the matrix ships once
+  // per stage with the plan). Every spliced-centroid DuckDB oracle
+  // recomputes the same arithmetic and tie-breaks; IvfExprTierSpec pins
+  // the kernels against driver-side scalar references.
+
   /**
    * Deterministic spherical k-means coarse quantizer for IVF: seeds are
    * the first `nlist` corpus vectors by id, then `iters` Lloyd rounds
-   * (assign by max cosine, re-average, renormalize implicitly via
-   * cosine). Only the centroids (nlist × dim doubles — metadata-sized)
-   * ever reach the driver; the corpus is never collected.
+   * (assign by max cosine through the fused argmax, re-average,
+   * renormalize implicitly via cosine). Each round is one scan
+   * projection plus the (nlist × dim)-row update aggregate; only the
+   * centroids (nlist × dim doubles — metadata-sized) ever reach the
+   * driver, the corpus is never collected.
    */
-  def kmeansCentroids(corpus: DataFrame, nlist: Int, iters: Int = 2,
-                      idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Double]] =
-    lloydRounds(corpus, nlist, iters, idCol, vecCol,
-      (df, cents) => assignToCentroids(df, cents, idCol, vecCol))
+  def kmeansCentroidsByExpr(corpus: DataFrame, nlist: Int, iters: Int = 2,
+                            idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Double]] =
+    lloydRounds(corpus, nlist, iters, idCol, vecCol, argmaxAssign(vecCol))
 
-  /** [[kmeansCentroids]] with assignment through the centroid-TABLE
-    * tier ([[assignToCentroidsByTable]]) — the training path past the
-    * literal cap: nlist in the thousands keeps each Lloyd round at one
-    * broadcast join + one map-combined argmax + the (nlist × dim)-row
-    * update aggregate; only the centroids ever reach the driver. The
-    * update arithmetic is the shared [[lloydRounds]] fold, so both
-    * trainers implement ONE k-means. */
-  def kmeansCentroidsByTable(corpus: DataFrame, nlist: Int, iters: Int = 2,
-                             idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Double]] = {
-    val spark = corpus.sparkSession
-    lloydRounds(corpus, nlist, iters, idCol, vecCol,
-      (df, cents) => assignToCentroidsByTable(df.select(col(idCol), col(vecCol)),
-        centroidsDf(spark, cents), idCol, vecCol))
+  /** [[kmeansCentroidsByExpr]] WARM-STARTED from an existing matrix —
+    * the index REFRESH trainer: after enough appends the frozen
+    * quantizer drifts off the grown corpus, and the production move is
+    * a few Lloyd rounds seeded from the CURRENT centroids over the
+    * CURRENT corpus, not a cold retrain (cold pays iters× the full
+    * n·nlist scan to rediscover what the old matrix already knows;
+    * warm converges in 1-2 rounds because the seed is already near the
+    * optimum). Cost per round is identical to the cold trainer's; the
+    * saving is in ROUNDS. Same update fold, same empty-cell rule, and
+    * the cold trainer is exactly this function seeded with the first
+    * nlist rows (spec-pinned bit-equal), so warm-vs-cold cannot drift
+    * semantically. iters=0 returns the seed unchanged (the no-op
+    * refresh, spec-pinned). */
+  def kmeansCentroidsByExprWarm(corpus: DataFrame, init: Array[Array[Double]],
+                                iters: Int = 1,
+                                vecCol: String = "embedding"): Array[Array[Double]] = {
+    require(init.nonEmpty, "warm start needs a non-empty seed matrix")
+    lloydRoundsFrom(corpus, init, iters, vecCol, argmaxAssign(vecCol))
   }
+
+  private def argmaxAssign(vecCol: String): (DataFrame, Array[Array[Double]]) => DataFrame =
+    (df, cents) => df.withColumn("__cid",
+      graft.functions.CentroidFunctions.centroid_argmax(col(vecCol), cents))
 
   private def lloydRounds(corpus: DataFrame, nlist: Int, iters: Int,
                           idCol: String, vecCol: String,
@@ -474,38 +494,25 @@ object Similarity {
     centroids
   }
 
-  /** The per-centroid (cosine, -i, i) structs whose array_max implements
-    * argmax-cosine with ties → LOWEST centroid id — THE assignment rule,
-    * shared by [[assignToCentroids]] and [[clusterReport]] so the
-    * tie-break can never drift between the IVF and clustering paths. */
-  private def centroidScoreStructs(centroids: Array[Array[Double]],
-                                   vecCol: String): Seq[Column] =
-    centroids.zipWithIndex.map { case (c, i) =>
-      val cl = array(c.toIndexedSeq.map(lit): _*)
-      struct(cosine(col(vecCol), cl).as("s"), lit(-i).as("p"), lit(i).as("c"))
-    }.toIndexedSeq
-
-  /** Add `__cid` = argmax-cosine centroid id (ties → lowest id). */
-  private def assignToCentroids(df: DataFrame, centroids: Array[Array[Double]],
-                                idCol: String, vecCol: String): DataFrame = {
-    val scored = centroidScoreStructs(centroids, vecCol)
-    df.withColumn("__cid", array_max(array(scored: _*)).getField("c"))
-  }
-
   /**
    * Per-cluster corpus report over a fitted quantizer: size, lowest
    * member id, and the DECIMAL-folded sum of member cosines to the
    * owning centroid (the inertia-style cohesion signal a curation
    * pipeline buckets by — SemDeDup-family clustering reads exactly
    * this table to pick prototype-dense clusters). One corpus pass:
-   * the nlist scored structs evaluate in the scan projection, the
-   * only exchange is the ≤nlist-group aggregation.
+   * the fused argmax picks the cluster, the member cosine is the
+   * same `vec_dot` fold against that one centroid, and the only
+   * exchange is the ≤nlist-group aggregation. A NULL vector has no
+   * cluster (NULL cid, NULL sim) and lands in the NULL group.
    */
   def clusterReport(centroids: Array[Array[Double]], corpus: DataFrame,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val best = array_max(array(centroidScoreStructs(centroids, vecCol): _*))
+    val fns = graft.functions.CentroidFunctions
     corpus
-      .select(col(idCol), best.getField("c").as("cid"), best.getField("s").as("sim"))
+      .select(col(idCol), col(vecCol), fns.centroid_argmax(col(vecCol), centroids).as("cid"))
+      .select(col(idCol), col(vecCol), col("cid"),
+        element_at(fns.centsLit(centroids), col("cid") + 1).as("__c"))
+      .select(col(idCol), col("cid"), cosine(col(vecCol), col("__c")).as("sim"))
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_vecs"),
         min(col(idCol)).as("first_vec"),
@@ -513,74 +520,34 @@ object Similarity {
       .orderBy("cid")
   }
 
-  /**
-   * IVF (inverted-file) ANN: corpus vectors are bucketed by nearest
-   * centroid; each query probes only its `nprobe` nearest lists. The
-   * 100 TB path when even one full corpus pass per query is too slow:
-   * the probe join is an equi-join on centroid id, scanning ~nprobe/nlist
-   * of the corpus per query. Recall measured against brute force in spec.
-   */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nlist: Int = 16, nprobe: Int = 4, iters: Int = 2,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfTopKWith(kmeansCentroids(corpus, nlist, iters, idCol, vecCol),
-      corpus, queries, k, nprobe, idCol, vecCol)
-
-  /** IVF probe/rank stage over PRECOMPUTED centroids — split out so a
-    * caller can hold the (deterministic) quantizer and recompute the
-    * same probe logic independently (the s37 oracle splices exactly
-    * these centroids into DuckDB SQL as literals).
-    *
-    * `broadcastQueries = false` when the query side is corpus-sized
-    * (leave-one-out evals, batch re-embedding): the probe join then
-    * shuffles both sides on the list id instead of collecting every
-    * query vector to the driver for a broadcast. */
-  def ivfTopKWith(centroids: Array[Array[Double]],
-                  corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int = 4,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  broadcastQueries: Boolean = true,
-                  rankAgg: Boolean = false): DataFrame =
-    ivfRank(ivfAssigned(centroids, corpus, idCol, vecCol),
-      centroids, queries, k, nprobe, idCol, vecCol, broadcastQueries, rankAgg)
-
-  /** The assigned-corpus shape both IVF serving paths consume:
-    * (nbr_id, cvec, cn, __cid) — vector, precomputed norm, owning
-    * list. [[ivfTopKWith]] computes it inline; [[ivfTopKOnIndex]]
-    * reads it back from a persisted index layout. `payloadCols` are
-    * carried through verbatim — the production index-with-payload
-    * layout (a refine tier re-ranks against the stored source text /
+  /** The assigned-corpus shape every IVF serving path consumes:
+    * (nbr_id, cvec, cn, __cid) — vector, precomputed norm, owning list
+    * ([[graft.functions.CentroidArgmax]]). [[ivfTopKByExpr]] computes
+    * it inline; [[ivfTopKOnIndexByExpr]] reads it back from a persisted
+    * `partitionBy(__cid)` index layout. `payloadCols` are carried
+    * through verbatim — the production index-with-payload layout (a
+    * refine tier re-ranks against the stored source text /
     * full-precision vectors without a second corpus join). */
-  def ivfAssigned(centroids: Array[Array[Double]], corpus: DataFrame,
-                  idCol: String = "vec_id", vecCol: String = "embedding",
-                  payloadCols: Seq[String] = Nil): DataFrame =
-    assignToCentroids(corpus, centroids, idCol, vecCol)
-      .select(Seq(col(idCol).as("nbr_id"), col(vecCol).as("cvec"),
-        norm(col(vecCol)).as("cn"), col("__cid")) ++ payloadCols.map(col): _*)
-
-  /** IVF probe/rank over an ALREADY-ASSIGNED corpus in the
-    * [[ivfAssigned]] shape. When that frame is a scan of a
-    * `partitionBy(cid)` index layout, the broadcast probe join on the
-    * partition column lets dynamic partition pruning skip every
-    * unprobed list's directory — the on-disk IVF read path. */
-  def ivfTopKOnIndex(centroids: Array[Array[Double]], assigned: DataFrame,
-                     queries: DataFrame, k: Int, nprobe: Int = 4,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     rankAgg: Boolean = false): DataFrame =
-    ivfRank(assigned, centroids, queries, k, nprobe, idCol, vecCol,
-      broadcastQueries = true, rankAgg = rankAgg)
+  def ivfAssignedByExpr(cents: Array[Array[Double]], corpus: DataFrame,
+                        idCol: String = "vec_id", vecCol: String = "embedding",
+                        payloadCols: Seq[String] = Nil): DataFrame =
+    corpus.select(Seq(col(idCol).as("nbr_id"), col(vecCol).as("cvec"),
+      norm(col(vecCol)).as("cn"),
+      graft.functions.CentroidFunctions.centroid_argmax(col(vecCol), cents).as("__cid")) ++
+      payloadCols.map(col): _*)
 
   /**
    * Driver-side probe selection for LITERAL queries (the serving-layer
    * shape: query vectors come from a user request, not a table, so
    * their nprobe nearest centroid ids are known before planning).
-   * Replicates [[ivfRank]]'s probe tie-break exactly — cosine
-   * descending, then centroid id descending — so a scan restricted to
-   * these lists is a superset of everything the probe join touches.
-   * The caller pushes the result as a STATIC `__cid IN (...)` filter
-   * onto the index scan: partition pruning at PLANNING time, with no
-   * DPP machinery needed (DPP cannot fire from a LocalRelation probe
-   * side — there is no scan on the build side to size the benefit
-   * against).
+   * Replicates [[graft.functions.CentroidProbes]]'s tie-break exactly —
+   * cosine descending, then centroid id descending — so a scan
+   * restricted to these lists is a superset of everything the probe
+   * join touches. The caller pushes the result as a STATIC
+   * `__cid IN (...)` filter onto the index scan: partition pruning at
+   * PLANNING time, with no DPP machinery needed (DPP cannot fire from a
+   * LocalRelation probe side — there is no scan on the build side to
+   * size the benefit against).
    */
   def literalProbeCids(centroids: Array[Array[Double]],
                        queries: Seq[Array[Double]], nprobe: Int = 4): Seq[Int] = {
@@ -598,42 +565,80 @@ object Similarity {
     }.distinct
   }
 
-  /** The probe-assignment + candidate-scoring stage shared by the
-    * batch rank path ([[ivfRank]]) and the STREAMING serving path
-    * (s77) — each query explodes to its nprobe nearest centroid ids
-    * (ties → higher cid, the array_sort-reverse order both oracles
-    * encode) and scores the probed lists' candidates by exact cosine.
-    * Everything up to the per-query ranking, which batch does with a
-    * window and streaming with bounded TopKAgg state. ONE definition:
-    * the streaming oracle's premise is that streaming must not change
-    * the answer, so the stream path may not drift from this stage.
-    * `broadcastQueries` is the one legal difference — a stream side
-    * cannot carry a broadcast hint (and drives the join instead). */
-  private[graft] def ivfCandidates(c: DataFrame, centroids: Array[Array[Double]],
-                                   queries: DataFrame, nprobe: Int,
-                                   idCol: String = "vec_id",
-                                   vecCol: String = "embedding",
-                                   broadcastQueries: Boolean = true): DataFrame = {
-    val probes = centroids.zipWithIndex.map { case (cv, i) =>
-      struct(cosine(col(vecCol), array(cv.toIndexedSeq.map(lit): _*)).as("s"), lit(i).as("c"))
-    }
-    val q = queries
-      .withColumn("__probe", explode(slice(reverse(array_sort(array(probes.toIndexedSeq: _*))), 1, nprobe)))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        norm(col(vecCol)).as("qn"), col("__probe.c").as("__cid"))
+  /** The probe-assignment + candidate-scoring stage shared by the batch
+    * rank paths and the STREAMING serving path (s77): each query
+    * explodes to its nprobe probe ids (one fused top-nprobe loop in its
+    * own scan projection — explode of a ≤nprobe array is the only
+    * expansion anywhere) and scores the probed lists' candidates by
+    * exact cosine. Everything up to the per-query ranking, which batch
+    * does with a window or TopKAgg and streaming with bounded TopKAgg
+    * state. ONE definition: the streaming oracle's premise is that
+    * streaming must not change the answer, so the stream path may not
+    * drift from this stage. `broadcastQueries` is the one legal
+    * difference — a stream side cannot carry a broadcast hint (and
+    * drives the join instead). */
+  private[graft] def ivfCandidatesByExpr(c: DataFrame, cents: Array[Array[Double]],
+                                         queries: DataFrame, nprobe: Int,
+                                         idCol: String = "vec_id",
+                                         vecCol: String = "embedding",
+                                         broadcastQueries: Boolean = true): DataFrame = {
+    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
+      norm(col(vecCol)).as("qn"),
+      explode(graft.functions.CentroidFunctions.centroid_probes(col(vecCol), cents, nprobe))
+        .as("__cid"))
     c.join(if (broadcastQueries) broadcast(q) else q, Seq("__cid"))
       .where(col("nbr_id") =!= col("query_id"))
       .select(col("query_id"), col("nbr_id"),
         cosinePrenormed(col("qvec"), col("cvec"), col("qn") * col("cn")).as("sim"))
   }
 
-  private def ivfRank(c: DataFrame, centroids: Array[Array[Double]],
-                      queries: DataFrame, k: Int, nprobe: Int,
-                      idCol: String, vecCol: String,
-                      broadcastQueries: Boolean = true,
-                      rankAgg: Boolean = false): DataFrame =
-    rankCandidates(ivfCandidates(c, centroids, queries, nprobe, idCol, vecCol,
-      broadcastQueries), k, rankAgg)
+  /**
+   * IVF (inverted-file) ANN over PRECOMPUTED centroids: corpus vectors
+   * are bucketed by nearest centroid; each query probes only its
+   * `nprobe` nearest lists, so the probe join is an equi-join on the
+   * list id scanning ~nprobe/nlist of the corpus per query. The caller
+   * holds the (deterministic) quantizer, so an oracle can recompute the
+   * same probe logic independently (the s37 oracle splices exactly
+   * these centroids into DuckDB SQL as literals).
+   *
+   * `broadcastQueries = false` when the query side is corpus-sized
+   * (leave-one-out evals, batch re-embedding): the probe join then
+   * shuffles both sides on the list id instead of collecting every
+   * query vector to the driver for a broadcast. With `rankAgg` and
+   * broadcast queries it ranks through the fused kernel
+   * ([[FusedTopK]]), which runs when called, as [[bruteForceTopK]]
+   * describes.
+   */
+  def ivfTopKByExpr(cents: Array[Array[Double]], corpus: DataFrame, queries: DataFrame,
+                    k: Int, nprobe: Int = 4,
+                    idCol: String = "vec_id", vecCol: String = "embedding",
+                    broadcastQueries: Boolean = true,
+                    rankAgg: Boolean = false): DataFrame = {
+    val assigned = ivfAssignedByExpr(cents, corpus, idCol, vecCol)
+    if (rankAgg && broadcastQueries && FusedTopK.applies(corpus, queries, idCol))
+      FusedTopK.ivf(assigned, cents, queries, k, nprobe, idCol, vecCol, pruneLists = false)
+    else rankCandidates(ivfCandidatesByExpr(assigned,
+      cents, queries, nprobe, idCol, vecCol, broadcastQueries), k, rankAgg)
+  }
+
+  /** IVF probe/rank over an ALREADY-ASSIGNED corpus in the
+    * [[ivfAssignedByExpr]] shape. When that frame is a scan of a
+    * `partitionBy(__cid)` index layout, the broadcast probe join on the
+    * partition column lets dynamic partition pruning skip every
+    * unprobed list's directory — the on-disk IVF read path. With
+    * `rankAgg` and broadcast queries the fused kernel reads only the
+    * probed lists (a static `__cid IN (...)` filter, partition pruning
+    * at planning time) and runs when called, as [[bruteForceTopK]]
+    * describes. */
+  def ivfTopKOnIndexByExpr(cents: Array[Array[Double]], assigned: DataFrame,
+                           queries: DataFrame, k: Int, nprobe: Int = 4,
+                           idCol: String = "vec_id", vecCol: String = "embedding",
+                           broadcastQueries: Boolean = true,
+                           rankAgg: Boolean = false): DataFrame =
+    if (rankAgg && broadcastQueries && FusedTopK.applies(assigned, queries, idCol))
+      FusedTopK.ivf(assigned, cents, queries, k, nprobe, idCol, vecCol, pruneLists = true)
+    else rankCandidates(ivfCandidatesByExpr(assigned, cents, queries, nprobe,
+      idCol, vecCol, broadcastQueries), k, rankAgg)
 
   /** The shared final ranking of a scored candidate stream
     * (query_id, nbr_id, sim) → top-k with the (sim DESC, nbr_id)
@@ -641,8 +646,8 @@ object Similarity {
     * query set is broadcast, `rankAgg` never builds this stream: the
     * fused kernel ([[FusedTopK]]) ranks inside the corpus scan. What
     * reaches here is the window form, the shuffled-query forms
-    * (`broadcastQueries = false`), streaming inputs, and the literal,
-    * table and hierarchical tiers.
+    * (`broadcastQueries = false`), streaming inputs, and the
+    * hierarchical tier.
     *
     * `viaAgg` picks the BOUNDED-BUFFER form ([[graft.functions.TopKAgg]]
     * — the identical total order, so answers are row-for-row equal on
@@ -684,244 +689,6 @@ object Similarity {
     require(dt == org.apache.spark.sql.types.LongType,
       s"rankCandidates(viaAgg): nbr_id must be LONG for the TopKAgg buffer " +
         s"encoding, got $dt — use the window form")
-
-  // ------------------------- centroid-TABLE serving tier (nlist-unbounded)
-
-  /** The trained coarse quantizer as a TABLE — (cid int, cvec
-    * array<double>): the form that rides a broadcast join instead of
-    * per-centroid literal expressions. This is the tier past the
-    * [[ivfListsFor]] maxBits literal cap: a codegen'd projection holds
-    * ~32 centroid structs comfortably; a broadcast table holds
-    * thousands (nlist × dim doubles stays metadata-sized — 1024 lists
-    * × 64 dims = 512 KB). In production this frame is simply the
-    * persisted index's own centroid table (`$root/centroids`), read
-    * once per session — [[centroidsDf]] exists so the in-memory array
-    * form can enter the same code path. */
-  def centroidsDf(spark: org.apache.spark.sql.SparkSession,
-                  cents: Array[Array[Double]]): DataFrame = {
-    import spark.implicits._
-    cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq.toDF("cid", "cvec")
-  }
-
-  private def centroidSide(cdf: DataFrame): DataFrame =
-    broadcast(cdf.select(col("cid").as("__tc_cid"), col("cvec").as("__tc_cvec")))
-
-  /** Table-join argmax assignment — [[assignToCentroids]]'s semantics
-    * (max cosine, ties → LOWEST cid) without per-centroid literals:
-    * one broadcast nested-loop join against the nlist-row centroid
-    * table, IMMEDIATELY projected down to skinny (id, score, cid)
-    * rows, then a [[graft.functions.TopKAgg]] k=1 argmax per row and a
-    * join back to the input to re-attach its columns. The skinny
-    * projection is the load-bearing move: the ×nlist expansion must
-    * never carry the vector (or any payload) into the aggregation —
-    * a payload-carrying max(struct) is complex-typed, which Spark
-    * aggregates with a SORT fallback over the full expansion
-    * (measured: ~n·nlist·800 B of spill — 160 GB at 200 k × 1024 —
-    * where the skinny form streams ~20 B rows through the bounded
-    * map-side buffers). TopKAgg's (score DESC, id ASC) order is
-    * exactly the assignment tie-break. Flop count matches the literal
-    * path (n·nlist·dim either way); the cost over it is the skinny
-    * stream + one corpus join on id, paid once at index build time.
-    * The scan-local Expression form this scaladoc used to name as
-    * "the next tier" is now BUILT — [[ivfAssignedByExpr]] /
-    * [[kmeansCentroidsByExpr]] fuse the argmax into the scan
-    * projection with the matrix riding the plan as one Literal, and
-    * beat this path 3.5× on training at sf10 (SCALING.md r13). This
-    * tier remains the right one when the centroids are a TABLE the
-    * driver never holds (a persisted index's own centroid frame). */
-  private[graft] def assignToCentroidsByTable(df: DataFrame, cdf: DataFrame,
-                                              idCol: String, vecCol: String): DataFrame = {
-    val best = df.select(col(idCol), col(vecCol))
-      .crossJoin(centroidSide(cdf))
-      .select(col(idCol),
-        cosine(col(vecCol), col("__tc_cvec")).as("s"),
-        col("__tc_cid").cast("long").as("c"))
-      .groupBy(col(idCol))
-      .agg(graft.functions.TopKAgg.top_k(col("s"), col("c"), 1).as("tk"))
-      .select(col(idCol), element_at(col("tk"), 1).getField("_2").cast("int").as("__cid"))
-    df.join(best, Seq(idCol))
-  }
-
-  /** [[ivfAssigned]] through the table tier — same output shape
-    * (nbr_id, cvec, cn, __cid), any nlist. */
-  def ivfAssignedByTable(cdf: DataFrame, corpus: DataFrame,
-                         idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    assignToCentroidsByTable(corpus.select(col(idCol), col(vecCol)), cdf, idCol, vecCol)
-      .select(col(idCol).as("nbr_id"), col(vecCol).as("cvec"),
-        norm(col(vecCol)).as("cn"), col("__cid"))
-
-  /** Per-query probe selection through the table tier: each query
-    * scores the broadcast centroid table and keeps its nprobe best via
-    * [[graft.functions.TopKAgg]] (map-side bounded buffers — the
-    * shuffle carries ≤ nprobe (score, cid) pairs per query per
-    * partition, nothing is globally sorted and no row ever carries the
-    * query vector through the exchange). Tie-break: TopKAgg's total
-    * order is (score DESC, id ASC); feeding id = −cid makes ties land
-    * on the HIGHER cid — exactly [[ivfCandidates]]'s
-    * reverse-array-sort rule and the oracles' `ORDER BY s DESC, cid
-    * DESC`. Cosines are never NaN here ([[cosinePrenormed]] guards the
-    * zero norm), so the buffer order is total on the actual domain. */
-  private[graft] def probeCidsByTable(queries: DataFrame, cdf: DataFrame, nprobe: Int,
-                                      idCol: String, vecCol: String): DataFrame =
-    queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
-      .crossJoin(centroidSide(cdf))
-      .select(col("query_id"), cosine(col("__qv"), col("__tc_cvec")).as("s"),
-        (-col("__tc_cid")).cast("long").as("negc"))
-      .groupBy("query_id")
-      .agg(graft.functions.TopKAgg.top_k(col("s"), col("negc"), nprobe).as("tk"))
-      .select(col("query_id"), explode(col("tk")).as("e"))
-      .select(col("query_id"), (-col("e._2")).cast("int").as("__cid"))
-
-  /** [[ivfCandidates]] through the table tier: probe ids from
-    * [[probeCidsByTable]], query vectors re-attached by a join on
-    * query_id (n×nprobe skinny rows — the vector rides the join once
-    * per probe, never once per centroid), then the same list-bucketed
-    * candidate join and exact-cosine scoring. vs the literal path this
-    * trades one skinny aggregation + one query-side join for freedom
-    * in nlist — the trade a production index in the thousands of lists
-    * requires (the literal path stays the right call at ≤ 32 lists,
-    * where probe selection is scan-local). */
-  private[graft] def ivfCandidatesByTable(c: DataFrame, cdf: DataFrame,
-                                          queries: DataFrame, nprobe: Int,
-                                          idCol: String = "vec_id",
-                                          vecCol: String = "embedding",
-                                          broadcastQueries: Boolean = true): DataFrame = {
-    val probes = probeCidsByTable(queries, cdf, nprobe, idCol, vecCol)
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qvec"), norm(col(vecCol)).as("qn"))
-      .join(probes, Seq("query_id"))
-    c.join(if (broadcastQueries) broadcast(q) else q, Seq("__cid"))
-      .where(col("nbr_id") =!= col("query_id"))
-      .select(col("query_id"), col("nbr_id"),
-        cosinePrenormed(col("qvec"), col("cvec"), col("qn") * col("cn")).as("sim"))
-  }
-
-  /** IVF top-k through the centroid-TABLE tier — answer-identical to
-    * [[ivfTopKWith]] for the same centroids (assignment, probe
-    * selection, scoring and ranking all share the literal path's
-    * tie-breaks; IvfTableTierSpec pins the equivalence row-for-row),
-    * with nlist bounded only by what broadcasts. */
-  def ivfTopKByTable(cdf: DataFrame, corpus: DataFrame, queries: DataFrame,
-                     k: Int, nprobe: Int = 4,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     broadcastQueries: Boolean = true,
-                     rankAgg: Boolean = false): DataFrame =
-    rankCandidates(ivfCandidatesByTable(ivfAssignedByTable(cdf, corpus, idCol, vecCol),
-      cdf, queries, nprobe, idCol, vecCol, broadcastQueries), k, rankAgg)
-
-  /** [[ivfTopKOnIndex]] through the table tier: probe/rank over an
-    * already-assigned corpus (a `partitionBy(__cid)` index scan), any
-    * nlist. */
-  def ivfTopKOnIndexByTable(cdf: DataFrame, assigned: DataFrame, queries: DataFrame,
-                            k: Int, nprobe: Int = 4,
-                            idCol: String = "vec_id", vecCol: String = "embedding",
-                            broadcastQueries: Boolean = true,
-                            rankAgg: Boolean = false): DataFrame =
-    rankCandidates(ivfCandidatesByTable(assigned, cdf, queries, nprobe,
-      idCol, vecCol, broadcastQueries), k, rankAgg)
-
-  // ---------------- scan-local EXPRESSION tier (any nlist, no expansion)
-
-  /** [[ivfAssigned]] through the SCAN-LOCAL expression tier — the
-    * third tier (r13): the whole centroid matrix rides the plan as
-    * ONE Literal and assignment is a fused argmax loop inside the
-    * scan projection ([[graft.functions.CentroidFunctions]]). This
-    * recovers the literal tier's scan-local shape — no ×nlist row
-    * expansion, no aggregation, no join-back — at ANY nlist an
-    * executor holds (the matrix ships once per stage with the plan,
-    * the same nlist×dim volume the table tier broadcasts). Arithmetic
-    * and tie-breaks are bit-identical to the literal tier, so every
-    * spliced-centroid oracle gates this tier unchanged
-    * (IvfExprTierSpec pins all three tiers pairwise). */
-  def ivfAssignedByExpr(cents: Array[Array[Double]], corpus: DataFrame,
-                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    corpus.select(col(idCol).as("nbr_id"), col(vecCol).as("cvec"),
-      norm(col(vecCol)).as("cn"),
-      graft.functions.CentroidFunctions.centroid_argmax(col(vecCol), cents).as("__cid"))
-
-  /** [[ivfCandidates]] through the expression tier: each query's
-    * nprobe probe ids come from one fused top-nprobe loop in its own
-    * scan projection (explode of a ≤nprobe array — the only expansion
-    * anywhere in this tier), then the same list-bucketed candidate
-    * join. */
-  private[graft] def ivfCandidatesByExpr(c: DataFrame, cents: Array[Array[Double]],
-                                         queries: DataFrame, nprobe: Int,
-                                         idCol: String = "vec_id",
-                                         vecCol: String = "embedding",
-                                         broadcastQueries: Boolean = true): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-      norm(col(vecCol)).as("qn"),
-      explode(graft.functions.CentroidFunctions.centroid_probes(col(vecCol), cents, nprobe))
-        .as("__cid"))
-    c.join(if (broadcastQueries) broadcast(q) else q, Seq("__cid"))
-      .where(col("nbr_id") =!= col("query_id"))
-      .select(col("query_id"), col("nbr_id"),
-        cosinePrenormed(col("qvec"), col("cvec"), col("qn") * col("cn")).as("sim"))
-  }
-
-  /** IVF top-k through the scan-local expression tier — answer-
-    * identical to [[ivfTopKWith]]/[[ivfTopKByTable]] for the same
-    * centroids, with neither the literal tier's nlist cap nor the
-    * table tier's row expansion. With `rankAgg` and broadcast queries
-    * it ranks through the fused kernel ([[FusedTopK]]), which runs when
-    * called, as [[bruteForceTopK]] describes. */
-  def ivfTopKByExpr(cents: Array[Array[Double]], corpus: DataFrame, queries: DataFrame,
-                    k: Int, nprobe: Int = 4,
-                    idCol: String = "vec_id", vecCol: String = "embedding",
-                    broadcastQueries: Boolean = true,
-                    rankAgg: Boolean = false): DataFrame = {
-    val assigned = ivfAssignedByExpr(cents, corpus, idCol, vecCol)
-    if (rankAgg && broadcastQueries && FusedTopK.applies(corpus, queries, idCol))
-      FusedTopK.ivf(assigned, cents, queries, k, nprobe, idCol, vecCol, pruneLists = false)
-    else rankCandidates(ivfCandidatesByExpr(assigned,
-      cents, queries, nprobe, idCol, vecCol, broadcastQueries), k, rankAgg)
-  }
-
-  /** [[ivfTopKOnIndex]] through the expression tier. With `rankAgg`
-    * and broadcast queries the fused kernel reads only the probed lists
-    * (a static `__cid IN (...)` filter, partition pruning at planning
-    * time on a `partitionBy(__cid)` layout) and runs when called, as
-    * [[bruteForceTopK]] describes. */
-  def ivfTopKOnIndexByExpr(cents: Array[Array[Double]], assigned: DataFrame,
-                           queries: DataFrame, k: Int, nprobe: Int = 4,
-                           idCol: String = "vec_id", vecCol: String = "embedding",
-                           broadcastQueries: Boolean = true,
-                           rankAgg: Boolean = false): DataFrame =
-    if (rankAgg && broadcastQueries && FusedTopK.applies(assigned, queries, idCol))
-      FusedTopK.ivf(assigned, cents, queries, k, nprobe, idCol, vecCol, pruneLists = true)
-    else rankCandidates(ivfCandidatesByExpr(assigned, cents, queries, nprobe,
-      idCol, vecCol, broadcastQueries), k, rankAgg)
-
-  /** [[kmeansCentroids]] with scan-local expression-tier assignment —
-    * each Lloyd round is one scan projection + the (nlist × dim)-row
-    * update aggregate, at any nlist. */
-  def kmeansCentroidsByExpr(corpus: DataFrame, nlist: Int, iters: Int = 2,
-                            idCol: String = "vec_id", vecCol: String = "embedding"): Array[Array[Double]] =
-    lloydRounds(corpus, nlist, iters, idCol, vecCol,
-      (df, cents) => df.withColumn("__cid",
-        graft.functions.CentroidFunctions.centroid_argmax(col(vecCol), cents)))
-
-  /** [[kmeansCentroidsByExpr]] WARM-STARTED from an existing matrix —
-    * the index REFRESH trainer: after enough appends the frozen
-    * quantizer drifts off the grown corpus, and the production move is
-    * a few Lloyd rounds seeded from the CURRENT centroids over the
-    * CURRENT corpus, not a cold retrain (cold pays iters× the full
-    * n·nlist scan to rediscover what the old matrix already knows;
-    * warm converges in 1-2 rounds because the seed is already near the
-    * optimum). Cost per round is identical to the cold trainer's; the
-    * saving is in ROUNDS. Same update fold, same empty-cell rule, and
-    * the cold trainer is exactly this function seeded with the first
-    * nlist rows (spec-pinned bit-equal), so warm-vs-cold cannot drift
-    * semantically. iters=0 returns the seed unchanged (the no-op
-    * refresh, spec-pinned). */
-  def kmeansCentroidsByExprWarm(corpus: DataFrame, init: Array[Array[Double]],
-                                iters: Int = 1,
-                                vecCol: String = "embedding"): Array[Array[Double]] = {
-    require(init.nonEmpty, "warm start needs a non-empty seed matrix")
-    lloydRoundsFrom(corpus, init, iters, vecCol,
-      (df, cents) => df.withColumn("__cid",
-        graft.functions.CentroidFunctions.centroid_argmax(col(vecCol), cents)))
-  }
 
   /** A derived IVF probe-count configuration: the smallest probed
     * count that HELD `targetRecall` on the audited query sample, plus
@@ -1139,7 +906,7 @@ object Similarity {
   /** IVF top-k through the HIERARCHICAL expression tier: the s83/s84
     * scan-local shape with the flat per-row nlist quantizer scan
     * replaced by the two-level loop — the tier SCALING.md r13 named
-    * for ≥10¹⁰ vectors, where even the expression tier's flat n·nlist
+    * for ≥10¹⁰ vectors, where even the flat kernel's n·nlist
     * assignment dominates. Index semantics change ONLY through the
     * assignment/probe approximation (the candidate join, ranking and
     * tie-breaks are the shared code); with cprobe ≥ the owned coarse
@@ -1264,7 +1031,7 @@ object Similarity {
    * The INT8-QUANTIZED index frame — [[ivfAssignedByExpr]] with the
    * stored vector quantized ([[quantizeInt8]]) while ASSIGNMENT stays
    * full-precision (the quantizer sees the real vector; only the
-   * serving payload shrinks). Output shape matches [[ivfAssigned]]
+   * serving payload shrinks). Output shape matches [[ivfAssignedByExpr]]
    * (nbr_id, cvec, cn, __cid) with cvec the exact-small-integer
    * quantized array CARRIED AS array<tinyint> — the values are
    * integers in [−127, 127] by construction, so the byte cast is
@@ -1281,7 +1048,7 @@ object Similarity {
    * index-FOOTPRINT lever: scan bytes, page-cache residency and
    * replication all shrink with the stored vector. The per-vector
    * norm is precomputed at build from the exact values, as
-   * [[ivfAssigned]] does.
+   * [[ivfAssignedByExpr]] does.
    */
   def quantizedAssignedByExpr(cents: Array[Array[Double]], corpus: DataFrame,
                               idCol: String = "vec_id",
@@ -1467,7 +1234,7 @@ object Similarity {
 
   /**
    * PQ encode/rank over PRECOMPUTED codebooks (stash-and-splice like
-   * [[ivfTopKWith]] — the s44 oracle re-derives codes, ADC scores and
+   * [[ivfTopKByExpr]] — the s44 oracle re-derives codes, ADC scores and
    * ranks from the same codebook literals). Corpus rows carry only
    * their m small codes (m + id ≈ 16 bytes vs 256 bytes float32 — the
    * memory-bound extreme of the quantization family; s39's int8 path
@@ -1516,16 +1283,10 @@ object Similarity {
                     books: Array[Array[Array[Double]]],
                     corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int = 4,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val codes = assignToCentroids(corpus, cents, idCol, vecCol)
-      .select(col(idCol).as("nbr_id"), col("__cid"),
-        pqCodes(books, col(vecCol)).as("codes"))
-    val probes = cents.zipWithIndex.map { case (cv, i) =>
-      struct(cosine(col(vecCol), array(cv.toIndexedSeq.map(lit): _*)).as("s"), lit(i).as("c"))
-    }
-    val q = queries
-      .withColumn("__probe", explode(slice(reverse(array_sort(array(probes.toIndexedSeq: _*))), 1, nprobe)))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        col("__probe.c").as("__cid"))
+    val codes = corpus.select(col(idCol).as("nbr_id"),
+      graft.functions.CentroidFunctions.centroid_argmax(col(vecCol), cents).as("__cid"),
+      pqCodes(books, col(vecCol)).as("codes"))
+    val q = probedQueries(cents, queries, nprobe, idCol, vecCol)
     val cand = codes.join(broadcast(q), Seq("__cid"))
       .where(col("nbr_id") =!= col("query_id"))
       .select(col("query_id"), col("nbr_id"),
@@ -1543,6 +1304,14 @@ object Similarity {
     pqTopKWith(pqCodebooks(corpus, m, kCent, iters, 64, idCol, vecCol),
       corpus, queries, k, idCol, vecCol)
 
+  /** (query_id, qv, __cid): each query once per probed list — the
+    * IVF-PQ probe side ([[graft.functions.CentroidProbes]]). */
+  private def probedQueries(cents: Array[Array[Double]], queries: DataFrame, nprobe: Int,
+                            idCol: String, vecCol: String): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
+      explode(graft.functions.CentroidFunctions.centroid_probes(col(vecCol), cents, nprobe))
+        .as("__cid"))
+
   /** Tiny broadcastable (cid, centroid) relation for residual math. */
   private def centroidDf(cents: Array[Array[Double]],
                          df: DataFrame): DataFrame = {
@@ -1557,7 +1326,7 @@ object Similarity {
     * x.toDouble − c, the exact arithmetic the oracle recomputes. */
   private def withResidual(cents: Array[Array[Double]], df: DataFrame,
                            idCol: String, vecCol: String): DataFrame =
-    assignToCentroids(df, cents, idCol, vecCol)
+    df.withColumn("__cid", graft.functions.CentroidFunctions.centroid_argmax(col(vecCol), cents))
       .join(broadcast(centroidDf(cents, df)), Seq("__cid"))
       .withColumn("__res", zip_with(col(vecCol), col("__cv"),
         (x, c) => x.cast("double") - c))
@@ -1596,13 +1365,7 @@ object Similarity {
     val codes = withResidual(cents, corpus, idCol, vecCol)
       .select(col(idCol).as("nbr_id"), col("__cid"),
         pqCodes(books, col("__res")).as("codes"))
-    val probes = cents.zipWithIndex.map { case (cv, i) =>
-      struct(cosine(col(vecCol), array(cv.toIndexedSeq.map(lit): _*)).as("s"), lit(i).as("c"))
-    }
-    val q = queries
-      .withColumn("__probe", explode(slice(reverse(array_sort(array(probes.toIndexedSeq: _*))), 1, nprobe)))
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-        col("__probe.c").as("__cid"))
+    val q = probedQueries(cents, queries, nprobe, idCol, vecCol)
       .join(broadcast(centroidDf(cents, queries)), Seq("__cid"))
       .withColumn("__qres", zip_with(col("qv"), col("__cv"),
         (x, c) => x.cast("double") - c))

@@ -23,14 +23,16 @@ object PipelineQueries {
   private type Books = OracleStash.Books
   private type Pca = OracleStash.Pca
 
-  /** Trained-quantizer memo, keyed by corpus dir. The k-means coarse
-    * quantizer (s37/d53/s45) and the PQ codebooks (s44/s45) are
-    * deterministic functions of the corpus (seeded init, fixed
-    * iterations), so within one JVM the second and later consumers
-    * reuse the first training — exactly how a production pipeline
-    * treats a trained index artifact: train once, serve many. Each
-    * query still stashes its OWN copy for oracle splicing, and a
-    * filtered Verify that runs only one of them trains on demand. */
+  /** Trained-quantizer memo, keyed by corpus generation and nlist
+    * (`$dir@<digest>#<nlist>`). The k-means coarse quantizers (s37/d53/
+    * s45 at 16 lists, s80 occupancy-held, s81/s82 at 128, s83-s89 at
+    * 256) and the PQ codebooks (s44/s45) are deterministic functions of
+    * the corpus (seeded init, fixed iterations), so within one JVM the
+    * second and later consumers reuse the first training — exactly how
+    * a production pipeline treats a trained index artifact: train once,
+    * serve many. Each query still stashes its OWN copy for oracle
+    * splicing, and a filtered Verify that runs only one of them trains
+    * on demand. */
   private[graft] val kmCache =
     scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
   private[graft] val pqCache =
@@ -39,69 +41,44 @@ object PipelineQueries {
     * name, mtime, length — recursing one level when embeddings.parquet
     * is a Spark-written DIRECTORY of part files) so an IN-PLACE
     * regeneration within one JVM invalidates the memo instead of
-    * serving a stale model (the round-5 incident class: the driver
-    * rewrites testdata under a live path). A plain top-level stat is
+    * serving a stale model (the round-5 incident class: the corpus is
+    * rewritten under a live path). A plain top-level stat is
     * not enough for the directory case: a part-file rewrite that keeps
     * the same entry names leaves the directory's own mtime/size
     * untouched. */
   private[graft] def corpusKey(dir: String): String =
     s"$dir@${RelationalQueries.srcDigest(dir, "embeddings")}"
-  /** On a key miss, drop any earlier generations of the SAME corpus dir
-    * before training: a long-lived JVM watching a dir that the driver
-    * regenerates repeatedly would otherwise accumulate one dead model
-    * per generation. Bounds each cache at one live entry per dir. */
+  /** On a key miss, drop every entry of ANOTHER generation of the same
+    * corpus dir before training: a long-lived JVM watching a dir that
+    * is regenerated repeatedly would otherwise accumulate one
+    * dead model per generation. Entries of generation `gen` are `gen`
+    * itself and `gen#…` (the per-nlist quantizers), so sibling nlists
+    * of the live generation survive. */
   private def evictStale[V](cache: scala.collection.concurrent.TrieMap[String, V],
-                            dir: String, key: String): Unit =
+                            dir: String, gen: String, key: String): Unit =
     if (!cache.contains(key))
-      cache.keys.filter(k => k.startsWith(s"$dir@") && k != key).foreach(cache.remove)
-  private[graft] def centroids16(s: SparkSession, dir: String): Array[Array[Double]] = {
-    val key = corpusKey(dir)
-    evictStale(kmCache, dir, key)
+      cache.keys.filter(k => k.startsWith(s"$dir@") && k != gen && !k.startsWith(s"$gen#"))
+        .foreach(cache.remove)
+  /** The corpus's `nlist`-list coarse quantizer ([[Similarity.kmeansCentroidsByExpr]],
+    * 2 Lloyd rounds), memoized per generation and nlist. */
+  private[graft] def centroids(s: SparkSession, dir: String, nlist: Int): Array[Array[Double]] = {
+    val gen = corpusKey(dir)
+    val key = s"$gen#$nlist"
+    evictStale(kmCache, dir, gen, key)
     kmCache.getOrElseUpdate(key,
-      Similarity.kmeansCentroids(t(s, dir, "embeddings"), nlist = 16, iters = 2))
+      Similarity.kmeansCentroidsByExpr(t(s, dir, "embeddings"), nlist = nlist, iters = 2))
   }
+  private[graft] def centroids16(s: SparkSession, dir: String): Array[Array[Double]] =
+    centroids(s, dir, 16)
   /** Occupancy-HELD coarse quantizer (the round-11 nlist discipline:
-    * lists sized to the corpus via ivfListsFor, not a fixed 16) — own
-    * memo because kmCache's key carries no nlist. Used by s80, whose
-    * probed fraction nprobe/nlist is the whole point of the twin. */
-  private[graft] val kmHeldCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  private def centroidsHeld(s: SparkSession, dir: String): Array[Array[Double]] = {
-    val key = corpusKey(dir)
-    evictStale(kmHeldCache, dir, key)
-    kmHeldCache.getOrElseUpdate(key, {
-      val emb = t(s, dir, "embeddings")
-      Similarity.kmeansCentroids(emb,
-        nlist = Similarity.ivfListsFor(emb.count()), iters = 2)
-    })
-  }
-  /** 128-list quantizer trained THROUGH the centroid-TABLE tier
-    * (kmeansCentroidsByTable) — the round-13 cap lift: 128 > the
-    * literal path's maxBits=5 bound (ivfListsFor), so this model can
-    * only be trained and served by the table tier. Own memo (neither
-    * kmCache nor kmHeldCache carries an nlist). */
-  private[graft] val kmTableCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  private def centroids128(s: SparkSession, dir: String): Array[Array[Double]] = {
-    val key = corpusKey(dir)
-    evictStale(kmTableCache, dir, key)
-    kmTableCache.getOrElseUpdate(key,
-      Similarity.kmeansCentroidsByTable(t(s, dir, "embeddings"), nlist = 128, iters = 2))
-  }
-  /** 256-list quantizer trained through the SCAN-LOCAL expression tier
-    * (kmeansCentroidsByExpr) — 8× past the literal cap with no row
-    * expansion anywhere (the r13 third tier). Own memo. */
-  private[graft] val kmExprCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
-  private def centroids256(s: SparkSession, dir: String): Array[Array[Double]] = {
-    val key = corpusKey(dir)
-    evictStale(kmExprCache, dir, key)
-    kmExprCache.getOrElseUpdate(key,
-      Similarity.kmeansCentroidsByExpr(t(s, dir, "embeddings"), nlist = 256, iters = 2))
-  }
+    * lists sized to the corpus via ivfListsFor, not a fixed 16). Used
+    * by s80, whose probed fraction nprobe/nlist is the whole point of
+    * the twin. */
+  private def centroidsHeld(s: SparkSession, dir: String): Array[Array[Double]] =
+    centroids(s, dir, Similarity.ivfListsFor(t(s, dir, "embeddings").count()))
   private def codebooks16(s: SparkSession, dir: String): Array[Array[Array[Double]]] = {
     val key = corpusKey(dir)
-    evictStale(pqCache, dir, key)
+    evictStale(pqCache, dir, key, key)
     pqCache.getOrElseUpdate(key,
       Similarity.pqCodebooks(t(s, dir, "embeddings")))
   }
@@ -111,7 +88,7 @@ object PipelineQueries {
     * DECIMAL-summed moments make it a pure function of the corpus). */
   private def pca8(s: SparkSession, dir: String): (Array[Double], Array[Array[Double]]) = {
     val key = corpusKey(dir)
-    evictStale(pcaCache, dir, key)
+    evictStale(pcaCache, dir, key, key)
     pcaCache.getOrElseUpdate(key, Similarity.pcaModel(t(s, dir, "embeddings")))
   }
 
@@ -123,7 +100,7 @@ object PipelineQueries {
   private def residualBooks16(s: SparkSession, dir: String,
                               cents: Array[Array[Double]]): Array[Array[Array[Double]]] = {
     val key = corpusKey(dir)
-    evictStale(pqResCache, dir, key)
+    evictStale(pqResCache, dir, key, key)
     pqResCache.getOrElseUpdate(key,
       Similarity.pqResidualCodebooks(cents, t(s, dir, "embeddings")))
   }
@@ -170,7 +147,7 @@ object PipelineQueries {
     val want = RelationalQueries.srcDigest(sfDir, "embeddings") + ":ivf-v2"
     import s.implicits._
     val cents = centroids16(s, sfDir)
-    Similarity.ivfAssigned(cents, t(s, sfDir, "embeddings"))
+    Similarity.ivfAssignedByExpr(cents, t(s, sfDir, "embeddings"))
       .write.mode("overwrite").partitionBy("__cid").parquet(s"$root/index")
     cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("cid", "centroid")
@@ -180,32 +157,29 @@ object PipelineQueries {
     want
   }
 
-  /** PRODUCTION-nlist index root (sibling of [[ivfIndexRoot]] — the
-    * r13 verdict's top item: the serving tiers proved nlist=1024 in
-    * probes while every DECLARED persisted query still rode the
-    * literal tier at nlist=16; this export is the declared form). */
+  /** PRODUCTION-nlist index root (sibling of [[ivfIndexRoot]], which
+    * persists the gate's nlist=16 index; this export is the declared
+    * production-nlist form). */
   def ivfProdIndexRoot(sfDir: String): String =
     RelationalQueries.dataRoot("ivf-prod", sfDir, "emb")
 
-  /** The production index's list count — 8× past the literal tier's
-    * maxBits cap, so this index can only be trained, assigned, and
-    * served through the nlist-unbounded tiers (expression/hier).
-    * ONE constant: the export, both serving queries, the streaming
+  /** The production index's list count — 8× past ivfListsFor's
+    * default maxBits cap. ONE constant: the export, both serving queries, the streaming
     * topology (s92), and the recall audit (s93) all read it, so the
     * "production nlist" the round claims is a single greppable value. */
   private[graft] val prodNlist = 128
 
   /** Ingest-once PRODUCTION index: the s60 export machinery at
     * production nlist through the EXPRESSION tier — fine quantizer
-    * trained by [[Similarity.kmeansCentroidsByExpr]] (the measured
-    * index-build winner: 4.4 s vs the table tier's 15.2 s at
+    * trained by [[Similarity.kmeansCentroidsByExpr]] (4.4 s at
     * sf10/1024, SCALING.md r13), corpus assigned scan-locally
     * ([[Similarity.ivfAssignedByExpr]] — no ×nlist expansion, no
     * join-back) and laid out as one hive partition per list. The
     * HIERARCHICAL model persists BESIDE the fine centroids: the
     * coarse matrix (`$root/coarse`, trained driver-side over the fine
     * matrix — metadata in, metadata out) makes the persisted artifact
-    * servable by all three nlist-unbounded tiers without retraining.
+    * servable by both the flat and the hierarchical kernels without
+    * retraining.
     * Digest-chained to the embeddings source with a layout-version
     * salt, exactly as the curated export. */
   def ensureIvfProdIndexExport(s: SparkSession, sfDir: String): String = {
@@ -611,7 +585,7 @@ object PipelineQueries {
       val delta = t(s, sfDir, "embeddings").where($"vec_id" < 200)
         .select(($"vec_id" + 100000000L).as("vec_id"),
           reverse($"embedding").as("embedding"))
-      Similarity.ivfAssigned(cents, delta)
+      Similarity.ivfAssignedByExpr(cents, delta)
         .write.mode("overwrite").partitionBy("__cid").parquet(s"$root/delta")
       RelationalQueries.markFresh(s"$root/delta", baseStamp)
     }
@@ -772,8 +746,8 @@ object PipelineQueries {
       // full seven-stage curation (Bench/Verify sweep the blocks)
       val vecs = curatedChunkVectors(s, sfDir).localCheckpoint(true)
       val nlist = Similarity.ivfListsFor(vecs.count())
-      val cents = Similarity.kmeansCentroids(vecs, nlist = nlist, iters = 2)
-      Similarity.ivfAssigned(cents, vecs, payloadCols = Seq("chunk_text"))
+      val cents = Similarity.kmeansCentroidsByExpr(vecs, nlist = nlist, iters = 2)
+      Similarity.ivfAssignedByExpr(cents, vecs, payloadCols = Seq("chunk_text"))
         .write.mode("overwrite").partitionBy("__cid").parquet(s"$root/index")
       cents.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
         .toDF("cid", "centroid")
@@ -941,7 +915,7 @@ object PipelineQueries {
         .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toArray)
       OracleStash.put(OracleStash.S60Cents, cents)
       val index = s.read.parquet(s"$root/index")
-      Similarity.ivfTopKOnIndex(cents, index,
+      Similarity.ivfTopKOnIndexByExpr(cents, index,
           t(s, dir, "embeddings").where($"vec_id" < 5), k = 10)
         .select($"query_id", $"nbr_id", $"rank")
         .orderBy("query_id", "rank")
@@ -959,7 +933,7 @@ object PipelineQueries {
       OracleStash.put(OracleStash.S61Cents, cents)
       val assigned = s.read.parquet(s"$root/index")
         .unionByName(s.read.parquet(s"$root/delta"))
-      Similarity.ivfTopKOnIndex(cents, assigned,
+      Similarity.ivfTopKOnIndexByExpr(cents, assigned,
           t(s, dir, "embeddings").where($"vec_id" < 5), k = 10)
         .select($"query_id", $"nbr_id", $"rank")
         .orderBy("query_id", "rank")
@@ -975,7 +949,7 @@ object PipelineQueries {
       val cents = s.read.parquet(s"$root/centroids").orderBy("cid").collect()
         .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toArray)
       OracleStash.put(OracleStash.S63Cents, cents)
-      Similarity.ivfTopKOnIndex(cents, tombstonedServingFrame(s, root),
+      Similarity.ivfTopKOnIndexByExpr(cents, tombstonedServingFrame(s, root),
           t(s, dir, "embeddings").where($"vec_id" < 5), k = 10)
         .select($"query_id", $"nbr_id", $"rank")
         .orderBy("query_id", "rank")
@@ -991,7 +965,7 @@ object PipelineQueries {
       val cents = s.read.parquet(s"$root/centroids").orderBy("cid").collect()
         .map(r => r.getSeq[Double](r.fieldIndex("centroid")).toArray)
       OracleStash.put(OracleStash.S64Cents, cents)
-      Similarity.ivfTopKOnIndex(cents, s.read.parquet(s"$root/gen2/index"),
+      Similarity.ivfTopKOnIndexByExpr(cents, s.read.parquet(s"$root/gen2/index"),
           t(s, dir, "embeddings").where($"vec_id" < 5), k = 10)
         .select($"query_id", $"nbr_id", $"rank")
         .orderBy("query_id", "rank")
@@ -1020,7 +994,7 @@ object PipelineQueries {
       // the unprobed list directories (a LIMIT would not qualify)
       val probes = index.where($"nbr_id" < 12000)
         .select($"nbr_id".as("vec_id"), $"cvec".as("embedding"))
-      Similarity.ivfTopKOnIndex(cents, index, probes, k = 5)
+      Similarity.ivfTopKOnIndexByExpr(cents, index, probes, k = 5)
         .select($"query_id", $"nbr_id", $"rank")
         .orderBy("query_id", "rank")
     }),
@@ -1036,7 +1010,7 @@ object PipelineQueries {
       import s.implicits._
       val (cents, index, probes) = curatedCoarseServe(s, dir)
       OracleStash.put(OracleStash.S73Cents, cents)
-      Similarity.ivfTopKOnIndex(cents, index, probes, k = 5)
+      Similarity.ivfTopKOnIndexByExpr(cents, index, probes, k = 5)
         .select($"query_id", $"nbr_id", $"rank")
         .orderBy("query_id", "rank")
     }),
@@ -1055,7 +1029,7 @@ object PipelineQueries {
       import s.implicits._
       val (cents, index, probes) = curatedCoarseServe(s, dir)
       OracleStash.put(OracleStash.S76Cents, cents)
-      val shortlist = Similarity.ivfTopKOnIndex(cents, index, probes, k = 20)
+      val shortlist = Similarity.ivfTopKOnIndexByExpr(cents, index, probes, k = 20)
         .select($"query_id", $"nbr_id")
       val fine = index
         .join(broadcast(shortlist), Seq("nbr_id"))
@@ -1081,7 +1055,7 @@ object PipelineQueries {
       val emb = t(s, dir, "embeddings")
       val cents = centroids16(s, dir)
       OracleStash.put(OracleStash.S37Cents, cents)
-      Similarity.ivfTopKWith(cents, emb, emb.where($"vec_id" < 5), k = 10)
+      Similarity.ivfTopKByExpr(cents, emb, emb.where($"vec_id" < 5), k = 10)
         .select($"query_id", $"nbr_id", $"rank")
         .orderBy("query_id", "rank")
     }),
@@ -1135,88 +1109,70 @@ object PipelineQueries {
       // Answers are row-identical (same total order; the unchanged
       // oracle hash-checks it).
       knnLabelAgreement(emb,
-        Similarity.ivfTopKWith(cents, emb, emb, k = 1, broadcastQueries = false,
+        Similarity.ivfTopKByExpr(cents, emb, emb, k = 1, broadcastQueries = false,
           rankAgg = true))
     }),
-    // CENTROID-TABLE ANN SERVING at nlist=128 — the tier past the
-    // literal cap (the r12 verdict's top item): every prior IVF query
-    // rides per-centroid LITERAL structs, which bounds nlist at 32
-    // (ivfListsFor maxBits=5 — one codegen'd projection must hold
-    // nlist×dim doubles). Here the quantizer is TRAINED and SERVED
-    // through a broadcast centroid TABLE (kmeansCentroidsByTable /
-    // ivfTopKByTable): probe selection is a TopKAgg over the
-    // query×centroid broadcast join (map-side bounded buffers — no
-    // global sort, no vector through the probe shuffle), assignment a
-    // map-combined max(struct) argmax — nlist bounded only by what
-    // broadcasts (thousands of lists at 64 dims). Answers are
-    // PATH-INDEPENDENT: IvfTableTierSpec pins table ≡ literal
-    // row-for-row at nlist ≤ 32, and the oracle is the same spliced-
-    // centroid probe/rank recompute (ivfProbeOracleSql — size-agnostic
-    // VALUES literals), so the gate checks the 128-list path's true
-    // answers end-to-end.
+    // IVF ANN serving at nlist=128 — 4× past the gate's occupancy-held
+    // 32 lists (ivfListsFor's default cap). The fused argmax/probe
+    // kernels take any nlist, so the quantizer is trained and served
+    // exactly as s37's; the oracle is the same spliced-centroid
+    // probe/rank recompute (ivfProbeOracleSql — size-agnostic VALUES
+    // literals), so the gate checks the 128-list answers end-to-end.
+    // (The key keeps its historical `_table` suffix: this query once
+    // ran through a broadcast centroid-table encoding, since folded
+    // into the one kernel.)
     "s81_ann_ivf_table" -> ((s, dir) => {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
-      val cents = centroids128(s, dir)
+      val cents = centroids(s, dir, 128)
       OracleStash.put(OracleStash.S81Cents, cents)
-      Similarity.ivfTopKByTable(Similarity.centroidsDf(s, cents),
-          emb, emb.where($"vec_id" < 5), k = 10)
+      Similarity.ivfTopKByExpr(cents, emb, emb.where($"vec_id" < 5), k = 10)
         .select($"query_id", $"nbr_id", $"rank")
         .orderBy("query_id", "rank")
     }),
-    // s80's eval THROUGH THE TABLE TIER at nlist=128 — the
-    // every-vector-is-a-query shape where the probed fraction
-    // (nprobe/nlist) dominates: at 128 lists it is 4× smaller than
-    // s80's capped 32, and the tier is the one that lets nlist keep
-    // tracking the corpus past the literal bound (the measured sf10
-    // cell in SCALING.md r13 is exactly this query's shape at
-    // nlist=1024). Query side is the corpus — never broadcast; probe
-    // selection is the TopKAgg aggregation, not scan-stage literals.
-    // Same spliced-centroid oracle recompute as s80, so the reported
-    // per-label accuracies are the 128-list probe's true numbers.
+    // s80's eval at nlist=128 — the every-vector-is-a-query shape where
+    // the probed fraction (nprobe/nlist) dominates: at 128 lists it is
+    // 4× smaller than s80's capped 32. Query side is the corpus — never
+    // broadcast. Same spliced-centroid oracle recompute as s80, so the
+    // reported per-label accuracies are the 128-list probe's true
+    // numbers. (Historical `_table` suffix, as s81.)
     "s82_knn_label_eval_table" -> ((s, dir) => {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
-      val cents = centroids128(s, dir)
+      val cents = centroids(s, dir, 128)
       OracleStash.put(OracleStash.S82Cents, cents)
       // rankAgg: the eval-family ranking discipline (see s80)
       knnLabelAgreement(emb,
-        Similarity.ivfTopKByTable(Similarity.centroidsDf(s, cents),
-          emb, emb, k = 1, broadcastQueries = false, rankAgg = true))
+        Similarity.ivfTopKByExpr(cents, emb, emb, k = 1, broadcastQueries = false,
+          rankAgg = true))
     }),
-    // SCAN-LOCAL expression-tier ANN serving at nlist=256 — the THIRD
-    // tier (r13): the whole centroid matrix rides the plan as ONE
-    // Literal (the PQ-codebook pattern) and enters codegen as a
-    // reference object, so assignment and probe selection are fused
-    // loops inside the scan projection — the literal tier's
-    // scan-local shape with NO nlist cap and none of the table tier's
-    // ×nlist row expansion. At 256 lists over this corpus the probed
-    // lists can hold fewer than k candidates — correct IVF semantics
-    // (fewer results, never wrong ones), and the oracle recomputes
-    // the same sparse answer from the same spliced centroids.
+    // IVF ANN serving at nlist=256: the whole centroid matrix rides the
+    // plan as ONE Literal (the PQ-codebook pattern) and enters codegen
+    // as a reference object, so assignment and probe selection are
+    // fused loops inside the scan projection. At 256 lists over this
+    // corpus the probed lists can hold fewer than k candidates —
+    // correct IVF semantics (fewer results, never wrong ones), and the
+    // oracle recomputes the same sparse answer from the same spliced
+    // centroids.
     "s83_ann_ivf_expr" -> ((s, dir) => {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
-      val cents = centroids256(s, dir)
+      val cents = centroids(s, dir, 256)
       OracleStash.put(OracleStash.S83Cents, cents)
       Similarity.ivfTopKByExpr(cents, emb, emb.where($"vec_id" < 5), k = 10)
         .select($"query_id", $"nbr_id", $"rank")
         .orderBy("query_id", "rank")
     }),
-    // s80/s82's leave-one-out eval THROUGH THE EXPRESSION TIER at
-    // nlist=256 — the every-vector-is-a-query shape where the third
-    // tier's fused scan projection pays off twice: probe selection
-    // costs no ×nlist row expansion for the corpus-sized query side
-    // (the table tier streams n×nlist skinny rows through TopKAgg
-    // buffers; here it is one loop per row), and assignment needs no
-    // join-back. Measured same-session at sf10/nlist=1024: eval 11.8 s
-    // expr vs 22.8 s table, train 4.4 s vs 15.2 s, identical
-    // agreement (SCALING.md r13). Same spliced-centroid recompute
-    // oracle as s80/s82 — the tier must not change what the eval
-    // reports.
+    // s80/s82's leave-one-out eval at nlist=256: probe selection for the
+    // corpus-sized query side is one fused loop per row, with no
+    // ×nlist row expansion, and assignment needs no join-back
+    // (measured at sf10/nlist=1024 against a broadcast centroid-table
+    // encoding: eval 11.8 s vs 22.8 s, train 4.4 s vs 15.2 s, identical
+    // agreement — SCALING.md r13). Same spliced-centroid recompute
+    // oracle as s80/s82.
     "s84_knn_label_eval_expr" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val cents = centroids256(s, dir)
+      val cents = centroids(s, dir, 256)
       OracleStash.put(OracleStash.S84Cents, cents)
       // rankAgg: the eval-family ranking discipline (see s80)
       knnLabelAgreement(emb,
@@ -1243,7 +1199,7 @@ object PipelineQueries {
     "s85_ann_ivf_hier" -> ((s, dir) => {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
-      val fine = centroids256(s, dir)
+      val fine = centroids(s, dir, 256)
       val coarse = Similarity.kmeansLocalCentroids(fine,
         Similarity.coarseListsFor(fine.length))
       OracleStash.put(OracleStash.S85Model, (coarse, fine))
@@ -1263,7 +1219,7 @@ object PipelineQueries {
     // true numbers.
     "s86_knn_label_eval_hier" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val fine = centroids256(s, dir)
+      val fine = centroids(s, dir, 256)
       val coarse = Similarity.kmeansLocalCentroids(fine,
         Similarity.coarseListsFor(fine.length))
       OracleStash.put(OracleStash.S86Model, (coarse, fine))
@@ -1292,7 +1248,7 @@ object PipelineQueries {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
       val q = emb.where($"vec_id" < 5)
-      val cents = centroids256(s, dir)
+      val cents = centroids(s, dir, 256)
       OracleStash.put(OracleStash.S88Cents, cents)
       val ivf = Similarity.ivfTopKByExpr(cents, emb, q, k = 10)
         .select($"query_id", $"nbr_id").withColumn("__hit", lit(1))
@@ -1316,7 +1272,7 @@ object PipelineQueries {
       import s.implicits._
       val emb = t(s, dir, "embeddings")
       val q = emb.where($"vec_id" < 5)
-      val fine = centroids256(s, dir)
+      val fine = centroids(s, dir, 256)
       val coarse = Similarity.kmeansLocalCentroids(fine,
         Similarity.coarseListsFor(fine.length))
       OracleStash.put(OracleStash.S89Model, (coarse, fine))
@@ -1332,7 +1288,7 @@ object PipelineQueries {
     // PRODUCTION-NLIST PERSISTED SERVING — the r13 verdict's top item
     // closed as a DECLARED query: the four tiers and the probes proved
     // nlist=1024 serving (2.2-2.5×/batch pruned reads), but every
-    // gated persisted query still rode the literal tier at nlist=16.
+    // gated persisted query still served a 16-list index.
     // This one serves a 128-list index persisted by the s60 export
     // machinery through the EXPRESSION tier (trained by
     // kmeansCentroidsByExpr, assigned scan-locally, hive-partitioned
@@ -1737,7 +1693,7 @@ object PipelineQueries {
       val emb = t(s, dir, "embeddings")
       val cents = centroids16(s, dir)
       OracleStash.put(OracleStash.S65Cents, cents)
-      Similarity.ivfTopKWith(cents, emb.where($"label".isin(0, 2, 4, 6, 8)),
+      Similarity.ivfTopKByExpr(cents, emb.where($"label".isin(0, 2, 4, 6, 8)),
           emb.where($"vec_id" < 5), k = 10)
         .select($"query_id", $"nbr_id", $"rank")
         .orderBy("query_id", "rank")
@@ -1760,7 +1716,7 @@ object PipelineQueries {
         .select($"query_id", $"nbr_id".as("pos_id"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"query_id").orderBy($"rank")
-      Similarity.ivfTopKWith(cents, emb, queries, k = 8)
+      Similarity.ivfTopKByExpr(cents, emb, queries, k = 8)
         .join(broadcast(pos), Seq("query_id"))
         .where($"nbr_id" =!= $"pos_id")
         .withColumn("neg_rank", row_number().over(w))
@@ -3428,15 +3384,13 @@ object PipelineQueries {
 
   /** s81's oracle: the SAME probe/rank recompute as s37 — the spliced-
     * centroid VALUES form is size-agnostic, so 128 lists splice as
-    * readily as 16; the gate thereby checks that the table tier's
-    * probe assignment (TopKAgg over a broadcast centroid table) lands
-    * on exactly the answers the literal-path semantics define. */
+    * readily as 16. */
   private def ivfTableOracle: Map[String, String] =
     OracleStash.get(OracleStash.S81Cents).map(c => "s81_ann_ivf_table" -> ivfProbeOracleSql(c)).toMap
 
   /** s83's oracle: the identical probe/rank recompute once more, from
-    * the 256-list expression-tier quantizer — the third tier's answers
-    * must fall out of the same spliced-centroid semantics (and the
+    * the 256-list quantizer — the answers must fall out of the same
+    * spliced-centroid semantics (and the
     * sparse lists at 256-over-500 occupancy fall out of it too: the
     * recompute simply yields fewer than k rows where the probed lists
     * hold fewer candidates). */
@@ -3456,9 +3410,8 @@ object PipelineQueries {
 
   /** The IVF leave-one-out eval recompute for a given quantizer —
     * spliced centroids, EVERY vector a query, probe/rank to top-1,
-    * per-label fold. Shared by s80 (occupancy-held literal tier) and
-    * s82 (nlist=128 table tier): the tier must not change what the
-    * eval reports for the same trained model. */
+    * per-label fold. Shared by s80 (occupancy-held nlist) and s82
+    * (nlist=128). */
   private def knnIvfOracleSql(c: Cents): String =
     s"""WITH ${centroidAssignCtes(c, "embedding")},
        |qprobe AS (SELECT vec_id AS query_id, embedding AS qv, cid FROM (
@@ -3479,14 +3432,13 @@ object PipelineQueries {
     OracleStash.get(OracleStash.S80Cents)
       .map(c => "s80_knn_label_eval_ivf" -> knnIvfOracleSql(c)).toMap
 
-  /** s82's oracle: the same recompute over the 128-list table-tier
-    * quantizer. */
+  /** s82's oracle: the same recompute over the 128-list quantizer. */
   private def knnTableOracle: Map[String, String] =
     OracleStash.get(OracleStash.S82Cents)
       .map(c => "s82_knn_label_eval_table" -> knnIvfOracleSql(c)).toMap
 
   /** s84's oracle: the same recompute once more, over the 256-list
-    * expression-tier quantizer — three tiers, one eval semantics. */
+    * quantizer. */
   private def knnExprOracle: Map[String, String] =
     OracleStash.get(OracleStash.S84Cents)
       .map(c => "s84_knn_label_eval_expr" -> knnIvfOracleSql(c)).toMap

@@ -723,7 +723,7 @@ object StreamingQueries {
       // code, so the stream cannot drift from the answer the oracle
       // encodes; only the ranking differs (TopKAgg state vs a window),
       // and a stream side cannot carry a broadcast hint
-      val cand = graft.operators.Similarity.ivfCandidates(
+      val cand = graft.operators.Similarity.ivfCandidatesByExpr(
         index, cents, qstream, nprobe = 4, broadcastQueries = false)
       val ranked = cand.groupBy($"query_id")
         .agg(graft.functions.TopKAgg.top_k($"sim", $"nbr_id", 10).as("tk"))
@@ -746,7 +746,7 @@ object StreamingQueries {
     // s77's 1.0 — THE difference between a serving bill that scales
     // with requests and one that scales with the corpus. Ranking runs
     // per batch (each request answered at request time, the true
-    // serving contract) through the SAME ivfTopKOnIndex the batch path
+    // serving contract) through the SAME ivfTopKOnIndexByExpr the batch path
     // uses, so pruning provably cannot change the answer: each query
     // joins only its own nprobe lists, a subset of the batch union.
     // The oracle is the batch probe/rank recompute over all 15
@@ -764,7 +764,7 @@ object StreamingQueries {
       s78BatchPins = Map.empty
       prunedServeStream(s, dir, "s78", s"$root/index", cents, nprobe = 4,
         rank = (idx, q) => graft.operators.Similarity
-          .ivfTopKOnIndex(cents, idx, q, k = 10, nprobe = 4),
+          .ivfTopKOnIndexByExpr(cents, idx, q, k = 10, nprobe = 4),
         pinNeedle = "graft-ivf/",
         recordPin = (id, pin) => s78BatchPins += id -> pin)
     }),
@@ -838,9 +838,8 @@ object StreamingQueries {
     // 128-list expression-tier index. Same request bus (five batches
     // of three), same driver-side probe selection (literalProbeCids is
     // plain Scala — any nlist), same static `__cid IN (...)` planning-
-    // time pruning; the ranking stage is ivfTopKOnIndexByExpr (the
-    // literal tier s78 serves would need a 128-struct codegen'd
-    // projection — past its cap by design). The InSet bound stays
+    // time pruning; the ranking stage is ivfTopKOnIndexByExpr, as
+    // s78's. The InSet bound stays
     // structural at ≤ 3·nprobe = 12, which at nlist=128 is a 0.09 read
     // fraction per batch — the pin now lands FAR from nlist, which is
     // the whole production story. Oracle: the batch probe/rank

@@ -350,6 +350,29 @@ class PlanChecksSpec extends AnyFunSuite {
     assert(scan.isDefined && scan.get.contains("__cid"), s"index scan: $scan\n${p.take(2000)}")
   }
 
+  test("IVF routing: s37/s60/s77/s80/s81/s82 assign and probe through the fused kernels only") {
+    // one kernel per semantics: probe selection is CentroidProbes and
+    // in-memory assignment CentroidArgmax — a second encoding (an
+    // array_sort over per-centroid structs, or a centroid-table join)
+    // reintroduced on any of these keys turns this red. s60/s77 serve a
+    // persisted index, so their assignment lives in the partitions.
+    val probeOnly = Set("s60_ann_ivf_persisted", "s77_stream_ann_serving")
+    Seq("s37_ann_ivf", "s60_ann_ivf_persisted", "s77_stream_ann_serving",
+        "s80_knn_label_eval_ivf", "s81_ann_ivf_table", "s82_knn_label_eval_table").foreach { name =>
+      val p =
+        if (name == "s77_stream_ann_serving") {
+          SparkEntry.queries(name)(spark, sf) // runs the real stream
+          graft.queries.StreamingQueries.capturedPlan("s77_sink")
+            .getOrElse(fail("no captured streaming plan for s77_sink"))
+        } else plan(name)
+      assert(p.contains("centroid_probes("), s"$name: no fused probe selection\n${p.take(3000)}")
+      if (!probeOnly(name))
+        assert(p.contains("centroid_argmax("), s"$name: no fused assignment\n${p.take(3000)}")
+      assert(!p.contains("array_sort"), s"$name: per-centroid struct sort\n${p.take(3000)}")
+      assert(!p.contains("BroadcastNestedLoopJoin"), s"$name: centroid-table join\n${p.take(3000)}")
+    }
+  }
+
   test("s90: production-nlist serving dynamically prunes the persisted index partitions") {
     // s60's pin at nlist=128 through the expression tier: the probe
     // side is a real scan (embeddings filter), so the broadcast join

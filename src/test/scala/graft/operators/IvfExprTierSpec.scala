@@ -5,36 +5,92 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
 import graft.SparkTestSession.withTempDir
-import graft.functions.CentroidFunctions
+import graft.functions.{CentroidFunctions, IvfOps}
 
-/** The scan-local EXPRESSION tier's contract: bit-identical answers to
-  * the literal tier (where the literal tier can run) and to the table
-  * tier (at any nlist), with neither the literal tier's nlist cap nor
-  * the table tier's ×nlist row expansion — the matrix rides the plan
-  * as ONE Literal and assignment/probing are fused loops in the scan
-  * projection. */
+/** The IVF kernel's contract: the fused argmax/probe expressions
+  * ([[CentroidFunctions]]) answer exactly as driver-side scalar
+  * references of the same rules — argmax cosine with ties → the lowest
+  * cid ([[IvfOps.argmaxCidD]]), top-nprobe by cosine with ties → the
+  * higher cid ([[Similarity.literalProbeCids]]), and an exact top-k over
+  * each query's probed lists on the collected corpus — at any nlist,
+  * with the matrix riding the plan as ONE Literal and no per-centroid
+  * structs, row expansion or centroid join. Test names keep the
+  * literal/table tier names these answers were first pinned against;
+  * those encodings are gone and the scalar references stand in for
+  * them. */
 class IvfExprTierSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   lazy val emb = spark.read.parquet(s"${SparkTestSession.sf001}/embeddings.parquet")
-  lazy val cents16 = Similarity.kmeansCentroids(emb, nlist = 16, iters = 2)
+  lazy val cents16 = Similarity.kmeansCentroidsByExpr(emb, nlist = 16, iters = 2)
+  /** The corpus on the driver, in id order: (vec_id, vector). */
+  lazy val points: Array[(Long, Array[Double])] = emb.select($"vec_id", $"embedding")
+    .collect().map(r => (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray))
+    .sortBy(_._1)
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.select("query_id", "nbr_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
 
+  /** Scalar IVF top-k: each query's probed lists, candidates assigned
+    * by the scalar argmax, scored with the kernels' cosine fold and
+    * ranked (sim DESC, nbr_id ASC), self-pairs excluded. */
+  private def referenceTopK(cents: Array[Array[Double]], queryIds: Set[Long], k: Int,
+                            nprobe: Int = 4): Set[(Long, Long, Int)] = {
+    val owner = points.map { case (id, v) => id -> IvfOps.argmaxCidD(v, cents) }.toMap
+    points.filter(p => queryIds(p._1)).flatMap { case (qid, qv) =>
+      val probed = Similarity.literalProbeCids(cents, Seq(qv), nprobe).toSet
+      points.filter { case (id, _) => id != qid && probed(owner(id)) }
+        .map { case (id, v) => (id, IvfOps.cosD(qv, v)) }
+        .sortBy { case (id, s) => (-s, id) }
+        .take(k).zipWithIndex.map { case ((id, _), r) => (qid, id, r + 1) }
+    }.toSet
+  }
+
   test("assignment: expression argmax equals the literal struct argmax (ties -> lowest cid)") {
-    val lit = Similarity.ivfAssigned(cents16, emb)
-      .select("nbr_id", "__cid").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
     val ex = Similarity.ivfAssignedByExpr(cents16, emb)
       .select("nbr_id", "__cid").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-    assert(ex == lit)
+    assert(ex == points.map { case (id, v) => (id, IvfOps.argmaxCidD(v, cents16)) }.toSet)
+  }
+
+  test("assignment: forced score ties go to the LOWEST cid") {
+    // duplicate centroids force exact ties on every row: of each equal
+    // pair the lower cid must win (strict > over an ascending-cid scan)
+    val dup = Array(cents16(0), cents16(0), cents16(1), cents16(1))
+    val ex = Similarity.ivfAssignedByExpr(dup, emb)
+      .select("nbr_id", "__cid").collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(ex == points.map { case (id, v) => (id, IvfOps.argmaxCidD(v, dup)) }.toSet)
+    assert(ex.forall { case (_, cid) => cid == 0 || cid == 2 }, ex)
+    assert(ex.map(_._2) == Set(0, 2))
+  }
+
+  test("NULL vectors: no list, no probes, never a candidate, NULL cluster") {
+    // CentroidArgmax/CentroidProbes are null-intolerant: a NULL vector
+    // is assigned no list (the retired per-centroid struct argmax gave
+    // it cid 0 with a NULL score), so it never equi-joins a probed list
+    // and a NULL-vector query returns no rows. No declared query's
+    // input holds a NULL vector.
+    import TopKEdgeCases._
+    val c = corpus(spark)
+    val assigned = Similarity.ivfAssignedByExpr(cents, c)
+      .select("nbr_id", "__cid").collect().map(r => (r.get(0), r.get(1))).toMap
+    assert(assigned(5L) == null)
+    assert(assigned(1L) == 0)
+    val probes = queries(spark).where($"vec_id" === 9L)
+      .select(CentroidFunctions.centroid_probes($"embedding", cents, 2).as("p")).collect()
+    assert(probes.length == 1 && probes(0).isNullAt(0))
+    val got = Similarity.ivfTopKByExpr(cents, c, queries(spark), k = 20, nprobe = 4)
+      .select("query_id", "nbr_id").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.nonEmpty && !got.exists(_._1 == 9L) && !got.exists(_._2 == 5L), got.toSeq)
+    val report = Similarity.clusterReport(cents, c.where($"vec_id".isNotNull))
+      .collect().map(r => (Option(r.get(0)), r.getLong(1))).toMap
+    assert(report(None) == 1L, report)
   }
 
   test("probe selection: fused top-nprobe equals the literal rule incl. forced score ties") {
     // duplicate centroids force exact ties at nprobe=1: the HIGHER cid
-    // must win (the reverse-array-sort / ORDER BY s DESC, cid DESC rule)
+    // must win (the ORDER BY s DESC, cid DESC rule)
     val dup = Array(cents16(0), cents16(0), cents16(1), cents16(1))
     val q = emb.where($"vec_id" < 6)
     val ex = q.select($"vec_id",
@@ -59,20 +115,23 @@ class IvfExprTierSpec extends AnyFunSuite {
 
   test("serving: expression tier equals literal AND table tiers row-for-row") {
     val q = emb.where($"vec_id" < 8)
-    val lit = rows(Similarity.ivfTopKWith(cents16, emb, q, k = 10))
-    assert(rows(Similarity.ivfTopKByExpr(cents16, emb, q, k = 10)) == lit)
+    val ids = (0L until 8L).toSet
+    assert(rows(Similarity.ivfTopKByExpr(cents16, emb, q, k = 10)) == referenceTopK(cents16, ids, 10))
     val c128 = Similarity.kmeansCentroidsByExpr(emb, nlist = 128, iters = 2)
-    val tab = rows(Similarity.ivfTopKByTable(Similarity.centroidsDf(spark, c128), emb, q, k = 10))
-    assert(rows(Similarity.ivfTopKByExpr(c128, emb, q, k = 10)) == tab)
+    assert(rows(Similarity.ivfTopKByExpr(c128, emb, q, k = 10)) == referenceTopK(c128, ids, 10))
   }
 
   test("trainers: expression-assigned kmeans equals the literal trainer at nlist=16 and the table trainer at 128") {
-    val ex16 = Similarity.kmeansCentroidsByExpr(emb, nlist = 16, iters = 2)
-    ex16.zip(cents16).foreach { case (a, b) => assert(a.sameElements(b)) }
-    val ex128 = Similarity.kmeansCentroidsByExpr(emb, nlist = 128, iters = 2)
-    val tab128 = Similarity.kmeansCentroidsByTable(emb, nlist = 128, iters = 2)
-    assert(ex128.length == 128)
-    ex128.zip(tab128).foreach { case (a, b) => assert(a.sameElements(b)) }
+    // the scalar Lloyd (kmeansLocalCentroids: first nlist points in id
+    // order, scalar argmax, member means, empty cells keep their seed)
+    // is the reference both retired trainers were pinned equal to
+    val vs = points.map(_._2)
+    Seq(16 -> cents16, 128 -> Similarity.kmeansCentroidsByExpr(emb, nlist = 128, iters = 2))
+      .foreach { case (nlist, got) =>
+        val want = Similarity.kmeansLocalCentroids(vs, nlist, iters = 2)
+        assert(got.length == nlist)
+        got.zip(want).foreach { case (a, b) => assert(a.sameElements(b), s"nlist=$nlist") }
+      }
   }
 
   test("nlist=256: scan-local plan — no centroid joins, no literal structs, one Literal matrix") {
@@ -110,8 +169,8 @@ class IvfExprTierSpec extends AnyFunSuite {
   }
 
   test("eval shape: shuffled-query expression tier equals the literal tier") {
-    val lit = rows(Similarity.ivfTopKWith(cents16, emb, emb, k = 1, broadcastQueries = false))
-    assert(rows(Similarity.ivfTopKByExpr(cents16, emb, emb, k = 1, broadcastQueries = false)) == lit)
+    assert(rows(Similarity.ivfTopKByExpr(cents16, emb, emb, k = 1, broadcastQueries = false)) ==
+      referenceTopK(cents16, points.map(_._1).toSet, 1))
   }
 
   test("rankAgg: bounded TopKAgg ranking equals the window ranking row-for-row incl. sims") {

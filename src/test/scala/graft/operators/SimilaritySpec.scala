@@ -124,7 +124,8 @@ class SimilaritySpec extends AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "nbr_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val brute = pairs(Similarity.bruteForceTopK(emb, queries, k = 10))
-    val ivf = pairs(Similarity.ivfTopK(emb, queries, k = 10, nlist = 16, nprobe = 4))
+    val ivf = pairs(Similarity.ivfTopKByExpr(
+      Similarity.kmeansCentroidsByExpr(emb, nlist = 16, iters = 2), emb, queries, k = 10, nprobe = 4))
     val recall = (brute & ivf).size.toDouble / brute.size
     assert(recall >= 0.25, s"IVF recall $recall too low")
     // probing 4/16 lists must examine well under the full corpus per query
@@ -132,7 +133,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("kmeans centroids are finite and nlist-sized") {
-    val cs = Similarity.kmeansCentroids(emb, nlist = 8, iters = 1)
+    val cs = Similarity.kmeansCentroidsByExpr(emb, nlist = 8, iters = 1)
     assert(cs.length == 8)
     assert(cs.forall(c => c.length == 64 && c.forall(v => !v.isNaN && !v.isInfinite)))
   }
@@ -391,7 +392,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("residual IVF-PQ: recall vs exact L2 >= raw-vector IVF-PQ at equal bytes") {
     val queries = emb.where($"vec_id" < 20)
-    val cents = Similarity.kmeansCentroids(emb, nlist = 16, iters = 2)
+    val cents = Similarity.kmeansCentroidsByExpr(emb, nlist = 16, iters = 2)
     // equal byte budget: same m=8, k=16 codebook shape for both encodings
     val rawBooks = Similarity.pqCodebooks(emb)
     val resBooks = Similarity.pqResidualCodebooks(cents, emb)
@@ -418,7 +419,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("IVF-PQ returns only probed-list candidates and tracks full-scan PQ") {
     val queries = emb.where($"vec_id" < 20)
-    val cents = Similarity.kmeansCentroids(emb, nlist = 16, iters = 2)
+    val cents = Similarity.kmeansCentroidsByExpr(emb, nlist = 16, iters = 2)
     val books = Similarity.pqCodebooks(emb)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "nbr_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -432,7 +433,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("refine tier: exact re-rank recovers recall over unrefined residual IVF-PQ") {
     val queries = emb.where($"vec_id" < 20)
-    val cents = Similarity.kmeansCentroids(emb, nlist = 16, iters = 2)
+    val cents = Similarity.kmeansCentroidsByExpr(emb, nlist = 16, iters = 2)
     val books = Similarity.pqResidualCodebooks(cents, emb)
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "nbr_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -458,16 +459,16 @@ class SimilaritySpec extends AnyFunSuite {
     // row for row
     val corpus = graft.sources.Tables.load(spark, SparkTestSession.sf0001, "embeddings")
     val queries = corpus.where($"vec_id" < 5)
-    val cents = Similarity.kmeansCentroids(corpus, nlist = 16, iters = 2)
+    val cents = Similarity.kmeansCentroidsByExpr(corpus, nlist = 16, iters = 2)
     withTempDir("ivf-spec") { dirPath =>
       val dir = dirPath.toString
-      Similarity.ivfAssigned(cents, corpus)
+      Similarity.ivfAssignedByExpr(cents, corpus)
         .write.mode("overwrite").partitionBy("__cid").parquet(dir)
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.select("query_id", "nbr_id", "rank").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val mem = rows(Similarity.ivfTopKWith(cents, corpus, queries, k = 10))
-      val disk = rows(Similarity.ivfTopKOnIndex(cents, spark.read.parquet(dir), queries, k = 10))
+      val mem = rows(Similarity.ivfTopKByExpr(cents, corpus, queries, k = 10))
+      val disk = rows(Similarity.ivfTopKOnIndexByExpr(cents, spark.read.parquet(dir), queries, k = 10))
       assert(mem == disk, s"diverged: mem-only=${(mem -- disk).take(3)} disk-only=${(disk -- mem).take(3)}")
     }
   }

@@ -80,7 +80,7 @@ class IvfIndexLifecycleSpec extends AnyFunSuite {
         df.select("query_id", "nbr_id", "rank").collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
       // the tombstone-anti-join path
-      val tombstoned = rows(graft.operators.Similarity.ivfTopKOnIndex(cents,
+      val tombstoned = rows(graft.operators.Similarity.ivfTopKOnIndexByExpr(cents,
         spark.read.parquet(s"$root/index")
           .unionByName(spark.read.parquet(s"$root/delta"))
           .join(org.apache.spark.sql.functions.broadcast(
@@ -95,12 +95,12 @@ class IvfIndexLifecycleSpec extends AnyFunSuite {
         .unionByName(emb.where($"vec_id" < 200 && $"vec_id" % 10 =!= 7)
           .select(($"vec_id" + 100000000L).as("vec_id"),
             org.apache.spark.sql.functions.reverse($"embedding").as("embedding")))
-      val rebuilt = rows(graft.operators.Similarity.ivfTopKOnIndex(cents,
-        graft.operators.Similarity.ivfAssigned(cents, surviving), queries, k = 10))
+      val rebuilt = rows(graft.operators.Similarity.ivfTopKOnIndexByExpr(cents,
+        graft.operators.Similarity.ivfAssignedByExpr(cents, surviving), queries, k = 10))
       assert(tombstoned === rebuilt,
         "serving after deletes must equal a from-scratch rebuild on the surviving corpus")
       // the compacted generation serves identically from one clean scan
-      val compacted = rows(graft.operators.Similarity.ivfTopKOnIndex(cents,
+      val compacted = rows(graft.operators.Similarity.ivfTopKOnIndexByExpr(cents,
         spark.read.parquet(s"$root/gen2/index"), queries, k = 10))
       assert(compacted === tombstoned,
         "compaction must never change an answer")

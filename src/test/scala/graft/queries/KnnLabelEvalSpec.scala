@@ -59,15 +59,15 @@ class KnnLabelEvalSpec extends AnyFunSuite {
     // (AQE may still pick a broadcast at runtime from actual sizes;
     // that is size-based and correct — the pin is on the HINT)
     val emb = spark.read.parquet(s"${SparkTestSession.sf001}/embeddings.parquet")
-    val cents = Similarity.kmeansCentroids(
+    val cents = Similarity.kmeansCentroidsByExpr(
       emb, nlist = Similarity.ivfListsFor(emb.count()), iters = 2)
     val opt = Similarity
-      .ivfTopKWith(cents, emb, emb, k = 1, broadcastQueries = false)
+      .ivfTopKByExpr(cents, emb, emb, k = 1, broadcastQueries = false)
       .queryExecution.optimizedPlan.toString
     assert(!opt.contains("strategy=broadcast"),
       s"broadcast HINT present despite broadcastQueries=false:\n${opt.take(2000)}")
     val hinted = Similarity
-      .ivfTopKWith(cents, emb, emb, k = 1)
+      .ivfTopKByExpr(cents, emb, emb, k = 1)
       .queryExecution.optimizedPlan.toString
     assert(hinted.contains("strategy=broadcast"),
       "the default path lost its broadcast hint — this pin went vacuous")

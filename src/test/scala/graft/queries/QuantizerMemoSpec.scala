@@ -16,10 +16,12 @@ class QuantizerMemoSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def withFreshCorpus[T](body: String => T): T = withTempDir("memo") { d =>
+  private def withFreshCorpus[T](body: String => T): T = withSizedCorpus(20)(body)
+
+  private def withSizedCorpus[T](n: Int)(body: String => T): T = withTempDir("memo") { d =>
     val dir = d.toString
     val rnd = new scala.util.Random(7)
-    (0L until 20L).map(i => (i, Seq.fill(64)(rnd.nextFloat()), (i % 3).toInt))
+    (0L until n.toLong).map(i => (i, Seq.fill(64)(rnd.nextFloat()), (i % 3).toInt))
       .toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     body(dir)
@@ -49,6 +51,27 @@ class QuantizerMemoSpec extends AnyFunSuite {
       PipelineQueries.centroids16(spark, dir)
       assert(PipelineQueries.kmCache.keys.count(_.startsWith(s"$dir@")) === 1,
         s"stale generations must be evicted: ${PipelineQueries.kmCache.keys.toSeq}")
+    }
+  }
+
+  test("sibling nlists of one generation share the memo; a regeneration evicts both") {
+    withSizedCorpus(200) { dir =>
+      def live = PipelineQueries.kmCache.keys.filter(_.startsWith(s"$dir@")).toSet
+      val c16 = PipelineQueries.centroids16(spark, dir)
+      val c128 = PipelineQueries.centroids(spark, dir, 128)
+      assert(c16.length === 16 && c128.length === 128)
+      val gen1 = live
+      assert(gen1.size === 2, gen1)
+      // training the 128-list sibling evicted nothing: both are hits
+      assert(PipelineQueries.centroids16(spark, dir) eq c16)
+      assert(PipelineQueries.centroids(spark, dir, 128) eq c128)
+      new java.io.File(s"$dir/embeddings.parquet").listFiles()
+        .filter(_.getName.startsWith("part-"))
+        .foreach(f => assert(f.setLastModified(f.lastModified() + 2000L)))
+      PipelineQueries.centroids16(spark, dir)
+      val gen2 = live
+      assert(gen2.size === 1 && (gen2 & gen1).isEmpty,
+        s"a regeneration must evict every nlist of the old generation: $gen1 -> $gen2")
     }
   }
 }
